@@ -43,18 +43,18 @@ class DedupResult:
     edges: DataFrame         # duplicate edges over ALL docs (src, dst)
     clusters: DataFrame      # doc_id, cluster_id (min doc_id of cluster)
     lsh_metrics: DataFrame   # bucket/skew metrics (one row)
-    # RDD ids of the localCheckpointed materializations (sketches, pairs).
+    # RDD ids of the localCheckpointed materializations (sketches,
+    # exact_groups, tier-1 survivors, pairs, LSH internals).
     # NOTE a plain sketches.unpersist() is a SILENT NO-OP for checkpointed
     # DataFrames — the row blocks stay pinned until RDD GC or session end;
     # long-lived sessions running several pipelines must call release().
     ckpt_rdd_ids: list = None
 
     def release(self) -> None:
-        """Free every block this pipeline materialized: the cached
-        exact_groups map AND the localCheckpointed sketch/pair row blocks
-        (unpinned via the JVM persistent-RDD registry, the only handle
-        Spark exposes for checkpointed blocks)."""
-        self.exact_groups.unpersist()
+        """Free every block this pipeline materialized: the
+        localCheckpointed sketch, exact-group, tier-1 survivor and pair
+        blocks (unpinned via the JVM persistent-RDD registry, the only
+        handle Spark exposes for checkpointed blocks)."""
         jsc = self.sketches.sparkSession.sparkContext._jsc
         jmap = jsc.getPersistentRDDs()
         for rid in self.ckpt_rdd_ids or []:
@@ -174,10 +174,14 @@ def dedup_from_sketches(sketches: DataFrame,
 def _cluster_sketches(spark: SparkSession, sketches: DataFrame,
                       config: PipelineConfig, _ids0: set) -> DedupResult:
     sp = config.sketch
-    # exact_groups is consumed by reps, member edges and user inspection;
-    # persist the skinny (doc_id, rep_id) map so the fp groupBy+join runs
-    # once (16 B rows — columnar cache is fine at this width).
-    exact_groups = exact_collapse(sketches).persist()
+    # exact_groups is consumed by reps, member edges, cluster assignment
+    # and user inspection. localCheckpoint, NOT persist(): plans that read
+    # a columnar-cached relation do not share exchanges, so each consumer
+    # of reps (LSH, both verify attach sides) would re-run the rep-id
+    # semi-join and everything below it, exchanging and broadcasting the
+    # same rep-sketch side once per consumer. eager for the same
+    # multi-consumer checkpoint-race reason as the sketches.
+    exact_groups = exact_collapse(sketches).localCheckpoint(eager=True)
     rep_ids = exact_groups.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id")
     # reps is NOT persisted: it is a cheap semi-join re-read of the
     # checkpointed sketch blocks (a second fat materialization costs more
@@ -220,7 +224,7 @@ def _cluster_sketches(spark: SparkSession, sketches: DataFrame,
         max_iterations=config.cc_max_iterations,
         driver_threshold=config.cc_driver_threshold,
     )
-    # all_ids from the SKINNY persisted exact_groups map, not the fat
+    # all_ids from the SKINNY checkpointed exact_groups map, not the fat
     # sketch checkpoint: exact_collapse emits exactly one row per input
     # doc (nonempty members + empty-sketch self-reps), so the id sets are
     # identical — and clusters is consumed by several bench/user actions,
@@ -276,9 +280,9 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
     remapped into disjoint spaces (new -> even, ref -> odd encoded ids
     via a total bit-shift — safe over the full int64 hash-id range)
     and the sketch tables unioned, which lets the existing two-tier
-    verify_pairs (prefix pre-filter, shuffled-hash attach joins,
-    survivor semi-join) run untouched on the cross pairs; original ids
-    are recovered by skinny mapping joins on the way out.
+    verify_pairs (prefix pre-filter, sketch table restricted to tier-1
+    survivor ids, attach joins) run untouched on the cross pairs;
+    original ids are recovered by skinny mapping joins on the way out.
 
     Skew discipline: a boilerplate band key with A new and B ref docs
     join-explodes to A*B candidates, so band keys whose candidate

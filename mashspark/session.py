@@ -11,6 +11,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _task_cpus(cores: int) -> int:
+    """``MASHSPARK_TASK_CPUS`` (default 1) clamped to [1, cores]: a
+    ``local[cores]`` session whose task.cpus exceeds its core count never
+    offers a task slot, so every job hangs instead of failing."""
+    return min(max(int(os.environ.get("MASHSPARK_TASK_CPUS", "1")), 1), cores)
+
+
 def get_spark(cores: int | None = None, shuffle_partitions: int | None = None,
               app_name: str = "mashspark", extra_conf: dict | None = None) -> SparkSession:
     if cores is None:
@@ -90,7 +97,7 @@ def get_spark(cores: int | None = None, shuffle_partitions: int | None = None,
         # duty cycle — re-measure per workload mix; override via
         # MASHSPARK_TASK_CPUS (e.g. 2 for pandas-UDF-heavy jobs where
         # the JVM conversion side stays hot).
-        .config("spark.task.cpus", os.environ.get("MASHSPARK_TASK_CPUS", "1"))
+        .config("spark.task.cpus", str(_task_cpus(cores)))
     )
     if local_dir:
         b = b.config("spark.local.dir", local_dir)

@@ -149,6 +149,16 @@ def make_pvalue_udf(kmer_space: float, sketch_size: int):
     return pvalue_udf.asNondeterministic()
 
 
+def _broadcast_threshold(spark) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, as Spark parsed
+    it. The key accepts byte strings ("10MB"), which ``conf.get`` hands
+    back verbatim, so ``int(conf.get(...))`` raises on a valid setting;
+    SQLConf's accessor returns the parsed number (<= 0 disables
+    broadcasting)."""
+    return int(spark._jsparkSession.sessionState().conf()
+               .autoBroadcastJoinThreshold())
+
+
 def _sketch_side_small(sk: DataFrame) -> bool:
     """True when the optimizer's size estimate for the sketch relation
     is confidently under the broadcast threshold. Checkpointed RDD scans
@@ -159,11 +169,41 @@ def _sketch_side_small(sk: DataFrame) -> bool:
     try:
         est = int(sk._jdf.queryExecution().optimizedPlan().stats()
                   .sizeInBytes())  # py4j converts the scala BigInt to int
-        thr = int(sk.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"))
-        return 0 < thr and 0 <= est < thr
     except Exception:  # stats introspection is best-effort only
         return False
+    thr = _broadcast_threshold(sk.sparkSession)
+    return 0 < thr and 0 <= est < thr
+
+
+def _survivor_sketches(sk: DataFrame, cands: DataFrame) -> DataFrame:
+    """Restrict the fat sketch table to the ids of the surviving pairs
+    ``cands`` BEFORE the attach joins, so they only move survivors'
+    sketches instead of the whole table.
+
+    The plan is chosen from the exact size of the survivor-id set, not
+    from an estimate: a single collect fetches at most ``cap + 1``
+    distinct ids (the limit(n+1) probe of ``cc.connected_components``),
+    with ``cap`` the broadcast threshold over 8 B per id. When they fit,
+    the sketch table is semi-joined against a broadcast of them —
+    filtered map-side, never exchanged. Otherwise (the web-scale case,
+    or broadcasting disabled) the semi-join shuffles both sides, with a
+    SHUFFLE_HASH hint building on the skinny id set: without it the
+    planner picked a sort-merge semi-join that SORTED the 8 KB-row
+    sketch relation once per attach side (round-6 executed-plan
+    audit)."""
+    surv_ids = (
+        cands.select(F.col("id_a").alias("doc_id"))
+        .unionByName(cands.select(F.col("id_b").alias("doc_id")))
+        .distinct()
+    )
+    spark = sk.sparkSession
+    cap = _broadcast_threshold(spark) // 8
+    if cap > 0:
+        head = surv_ids.limit(cap + 1).toPandas()
+        if len(head) <= cap:
+            ids = spark.createDataFrame(head, surv_ids.schema)
+            return sk.join(F.broadcast(ids), "doc_id", "left_semi")
+    return sk.join(surv_ids.hint("shuffle_hash"), "doc_id", "left_semi")
 
 
 def _attach(cands: DataFrame, sk: DataFrame, id_col: str, suffix: str,
@@ -221,6 +261,9 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
     shuffle cost, true pairs are untouched, and the FINAL numbers are
     always the full-s exact ones (precision is never affected).
 
+    Between the tiers the sketch table is restricted to the survivors'
+    ids (``_survivor_sketches``), so tier 2 attaches only their sketches.
+
     Join strategy: shuffled-hash joins (no fat-row sorts); the cheap
     jaccard threshold runs before the p-value UDF (cheap-filter-first,
     CommandDistance.cpp:409-417).
@@ -265,9 +308,10 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
         ).select("id_a", "id_b")
         if materialize_tier1:
             # materialize the survivor list ONCE (16 B rows): it is
-            # consumed by the tier-2 attach chain AND both branches of the
-            # surv_ids union below — without this, the whole tier-1
-            # subtree (attach joins + prefix-verify UDF over EVERY
+            # consumed by the tier-2 attach chain AND by the survivor-id
+            # set of _survivor_sketches (its size probe, plus both union
+            # branches on the shuffled path) — without this, the whole
+            # tier-1 subtree (attach joins + prefix-verify UDF over EVERY
             # candidate) re-executes once per consumer (measured 3-5x in
             # the optimized plan; exchange reuse does not cover the
             # differently-partitioned branches). Callers inside
@@ -277,33 +321,12 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
             # per-batch re-execution instead. Block release is the
             # caller's pipeline-level concern (pipeline.DedupResult
             # .release() sweeps every checkpoint created during the run).
-            # eager: the survivor list has three consumers whose AQE jobs
-            # launch concurrently; a lazy checkpoint makes their tasks
-            # race on the checkpoint lock (see lsh.candidate_pairs).
+            # eager: on the shuffled path the survivor list has three
+            # consumers whose AQE jobs launch concurrently; a lazy
+            # checkpoint makes their tasks race on the checkpoint lock
+            # (see lsh.candidate_pairs).
             cands = cands.localCheckpoint(eager=True)
-        # restrict the fat table to survivor ids BEFORE the attach joins so
-        # they only move survivors' sketches instead of the whole table.
-        # No forced broadcast hint: the survivor-id set is O(true pairs)
-        # and unbounded at web scale — AQE picks broadcast vs shuffled
-        # semi-join from the measured size (autoBroadcastJoinThreshold is
-        # tuned in session.py), so small runs still get the broadcast plan
-        # without the OOM cliff a hard F.broadcast() would create.
-        surv_ids = (
-            cands.select(F.col("id_a").alias("doc_id"))
-            .unionByName(cands.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-        )
-        # SHUFFLE_HASH hint, build = the skinny survivor-id set: the
-        # checkpointed relations here are ExistingRDD scans with no size
-        # stats, so the planner (even with preferSortMergeJoin=false)
-        # falls back to SORT-merge for this semi-join and SORTS the fat
-        # 8 KB-row sketch relation — twice, once per attach side
-        # (round-6 executed-plan audit: 2x "SortMergeJoin LeftSemi" +
-        # "Sort [doc_id]" over the sketch exchange). The hint forces a
-        # shuffled-hash semi build on the id set; the fat side's
-        # doc_id exchange remains (and is reused by the attach join's
-        # partitioning requirement), the sorts disappear.
-        sk = sk.join(surv_ids.hint("shuffle_hash"), "doc_id", "left_semi")
+        sk = _survivor_sketches(sk, cands)
 
     df = _attach(cands, sk, "id_a", "a", F.col("sketch"), small=small)
     df = _attach(df, sk, "id_b", "b", F.col("sketch"), small=small)

@@ -4,6 +4,7 @@ params), precision == 1.0 (verification is Mash-exact), and exact cluster
 agreement with union-find over the oracle edges."""
 
 import itertools
+import re
 
 import numpy as np
 import pytest
@@ -161,19 +162,8 @@ def test_sketch_arrow_matches_pandas(spark):
         assert ra["fp1"] == rp["fp1"] and ra["fp2"] == rp["fp2"]
 
 
-def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path):
-    """Round-6: verify_pairs broadcasts the sketch side when its size
-    ESTIMATE is provably small (parquet-backed tables carry real stats;
-    checkpointed scans never qualify). Pin output equality between the
-    two attach strategies on a parquet-backed table, and that the small
-    path actually fires there."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from mashspark.params import LSHParams, SketchParams
-    from mashspark.sketch import sketch_documents
-    from mashspark import verify as V
-
+def _near_dup_docs(spark):
+    """40 random-word docs, every third with a near-dup variant."""
     rng = np.random.default_rng(3)
     words = ["w%03d" % i for i in range(300)]
     rows = []
@@ -182,17 +172,33 @@ def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path):
         rows.append((i, base))
         if i % 3 == 0:
             rows.append((1000 + i, base + " extra tail"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _all_pairs(sk):
+    ids = sk.select("doc_id")
+    return (ids.withColumnRenamed("doc_id", "id_a")
+            .crossJoin(ids.withColumnRenamed("doc_id", "id_b"))
+            .filter(F.col("id_a") < F.col("id_b")))
+
+
+def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path):
+    """Round-6: verify_pairs broadcasts the sketch side when its size
+    ESTIMATE is provably small (parquet-backed tables carry real stats;
+    checkpointed scans never qualify). Pin output equality between the
+    two attach strategies on a parquet-backed table, and that the small
+    path actually fires there."""
+    from mashspark.sketch import sketch_documents
+    from mashspark import verify as V
+
+    docs = _near_dup_docs(spark)
     sp, lp = SketchParams(s=128), LSHParams(prefix=64)
     path = str(tmp_path / "sk.parquet")
     sketch_documents(docs, sp, lp).write.parquet(path)
     sk = spark.read.parquet(path).select("doc_id", "sketch", "card_est")
     assert V._sketch_side_small(sk), "parquet-backed small table must qualify"
 
-    ids = sk.select("doc_id")
-    pairs = (ids.withColumnRenamed("doc_id", "id_a")
-             .crossJoin(ids.withColumnRenamed("doc_id", "id_b"))
-             .filter(F.col("id_a") < F.col("id_b")))
+    pairs = _all_pairs(sk)
     got = V.verify_pairs(pairs, sk, sp, jaccard_threshold=0.5,
                          prefix_filter=None).orderBy("id_a", "id_b").collect()
     # force the hint path for the same inputs
@@ -205,3 +211,88 @@ def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path):
         V._sketch_side_small = orig
     assert [tuple(r) for r in got] == [tuple(r) for r in ref]
     assert len(got) > 0
+
+
+def test_broadcast_threshold_parses_byte_strings(spark, tmp_path):
+    """autoBroadcastJoinThreshold accepts byte strings; conf.get hands
+    them back verbatim ("10MB"), so the threshold must come from Spark's
+    parsed value — int() of the raw string raised, and the small-side
+    check silently took the slow attach path."""
+    from mashspark import verify as V
+    from mashspark.sketch import sketch_documents
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    docs = spark.createDataFrame(
+        [(i, f"document {i} " + "shared boilerplate words " * 20) for i in range(8)],
+        "doc_id long, text string")
+    path = str(tmp_path / "sk.parquet")
+    sketch_documents(docs, SketchParams(s=64), LSHParams(prefix=32)).write.parquet(path)
+    sk = spark.read.parquet(path).select("doc_id", "sketch", "card_est")
+    spark.conf.set(key, "10MB")
+    try:
+        assert spark.conf.get(key) == "10MB"
+        assert V._broadcast_threshold(spark) == 10 * 1024 * 1024
+        assert V._sketch_side_small(sk)
+        spark.conf.set(key, "-1")
+        assert V._broadcast_threshold(spark) == -1
+        assert not V._sketch_side_small(sk)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_verify_survivor_paths_match(spark):
+    """verify_pairs with the prefix tier restricts the sketch table to
+    tier-1 survivor ids either by a map-side semi-join against the
+    collected ids (they fit under the broadcast cap) or by a shuffled
+    semi-join (broadcasting disabled). Both must return identical
+    pairs."""
+    from mashspark import verify as V
+    from mashspark.sketch import sketch_documents
+
+    sp = SketchParams(s=128)
+    # localCheckpoint: the pipeline's own materialization of the table
+    sk = sketch_documents(_near_dup_docs(spark), sp,
+                          LSHParams(prefix=64)).localCheckpoint(eager=True)
+    pairs = _all_pairs(sk)
+
+    def run():
+        out = V.verify_pairs(pairs, sk, sp, jaccard_threshold=0.5, prefix_filter=64)
+        return [tuple(r) for r in out.orderBy("id_a", "id_b").collect()], out
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    got, _ = run()
+    spark.conf.set(key, "-1")
+    try:
+        ref, out = run()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"ShuffledHashJoin .*LeftSemi", plan), plan
+    finally:
+        spark.conf.set(key, prev)
+    assert got == ref
+    assert len(got) > 0
+
+
+def test_exact_groups_one_row_per_sketch(spark):
+    """exact_groups holds exactly one (doc_id, rep_id) row per sketch row
+    — cluster assignment takes its id set from this map instead of the
+    sketch table. Verbatim mirrors map to the smallest id of their
+    group; a doc shorter than k (empty sketch) stays its own rep."""
+    rows = [(i, f"page {i} " + " ".join(f"tok{i}x{j}" for j in range(60)))
+            for i in range(10)]
+    rows += [(100, rows[0][1]), (101, rows[0][1]), (103, rows[3][1])]
+    rows.append((200, "tiny"))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    res = dedup_pipeline(docs, PipelineConfig(sketch=SketchParams(k=21, s=64)))
+    try:
+        n_sk = res.sketches.count()
+        groups = res.exact_groups.collect()
+        assert n_sk == len(rows)
+        assert len(groups) == n_sk
+        assert len({r.doc_id for r in groups}) == n_sk
+        rep = {r.doc_id: r.rep_id for r in groups}
+        assert rep[100] == rep[101] == 0 and rep[103] == 3 and rep[200] == 200
+        assert sorted(r.doc_id for r in res.clusters.collect()) == sorted(rep)
+    finally:
+        res.release()

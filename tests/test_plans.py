@@ -148,6 +148,55 @@ def test_verify_joins_hash_not_sort_merge(spark, docs_parquet):
     assert "SortMergeJoin" not in plan, plan
 
 
+def _executed_nodes(df):
+    """Every node of a DataFrame's executed (post-AQE, after an action)
+    physical plan, descending into query stages and reused exchanges."""
+    def walk(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+        name = node.nodeName()
+        if name.endswith("QueryStage"):
+            yield from walk(node.plan())
+        elif name == "ReusedExchange":
+            yield from walk(node.child())
+        elif name == "AdaptiveSparkPlan":
+            yield from walk(node.executedPlan())
+
+    return list(walk(df._jdf.queryExecution().executedPlan()))
+
+
+def test_verify_survivor_sketches_never_shuffled(spark, docs_parquet):
+    """With the prefix tier on and a tier-1 survivor-id set under the
+    broadcast cap, verify restricts the checkpointed sketch table by a
+    map-side semi-join against the collected ids: no shuffle exchange in
+    the executed plan may carry a sketch column (the shuffled semi-join
+    moved the whole table through an exchange to compare a subset)."""
+    from mashspark.verify import verify_pairs
+
+    docs = spark.read.parquet(docs_parquet)
+    sk = sketch_documents(docs, PARAMS, LSH).localCheckpoint(eager=True)
+    ids = sk.select("doc_id")
+    cands = (
+        ids.withColumnRenamed("doc_id", "id_a")
+        .crossJoin(ids.withColumnRenamed("doc_id", "id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+    out = verify_pairs(cands, sk, PARAMS, jaccard_threshold=0.5,
+                       prefix_filter=16)
+    assert out.collect()  # executes `out`'s own plan: AQE finalizes it
+    fat = []
+    for node in _executed_nodes(out):
+        if node.nodeName() != "Exchange":  # shuffle; broadcasts are "BroadcastExchange"
+            continue
+        o = node.output()
+        cols = [o.apply(i).name() for i in range(o.size())]
+        if any(c.startswith("sketch") for c in cols):
+            fat.append(cols)
+    assert not fat, f"shuffle exchanges carrying sketches: {fat}"
+
+
 def test_no_cartesian_blowup_in_candidate_families(spark, docs_parquet):
     """SimHash, SRP-embedding, and substring candidate generation must all
     pair via bucketed equi-joins — never CartesianProduct /

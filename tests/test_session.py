@@ -1,0 +1,18 @@
+"""Session factory guards that must hold without starting a session."""
+
+from mashspark.session import _task_cpus
+
+
+def test_task_cpus_clamped_to_cores(monkeypatch):
+    """task.cpus above the session's core count leaves no schedulable
+    task slot (every job hangs): the env override is clamped to
+    [1, cores]."""
+    monkeypatch.delenv("MASHSPARK_TASK_CPUS", raising=False)
+    assert _task_cpus(4) == 1
+    monkeypatch.setenv("MASHSPARK_TASK_CPUS", "2")
+    assert _task_cpus(4) == 2
+    monkeypatch.setenv("MASHSPARK_TASK_CPUS", "8")
+    assert _task_cpus(4) == 4
+    assert _task_cpus(1) == 1
+    monkeypatch.setenv("MASHSPARK_TASK_CPUS", "0")
+    assert _task_cpus(4) == 1
