@@ -104,7 +104,7 @@ def main():
             eager=True)
         cand, _m = _lsh.candidate_pairs(
             reps, band_doc_cap=cfg.lsh.band_doc_cap,
-            hard_bucket_cap=cfg.lsh.hard_bucket_cap, eager=True)
+            hard_bucket_cap=cfg.lsh.hard_bucket_cap)
         cand = cand.localCheckpoint(eager=True)
         t0 = time.time()
         sc.setJobDescription("bench_extra:verify_only")

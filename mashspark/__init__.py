@@ -17,7 +17,24 @@ Layering (SURVEY.md §7):
   ``bloom`` ``dsir`` ``bpe`` ``normalize`` ``profile`` ``streaming``
 """
 
+import sys as _sys
+
 from .params import SketchParams, LSHParams, PipelineConfig
+
+# A Spark Python worker imports mashspark while it unpickles its first
+# mashspark UDF, mid-task. Only there (pyspark already loaded and a task
+# context set; never the driver), and only on the CPython versions whose
+# zipimporter re-reads its archive eagerly, stop every later task from
+# re-parsing pyspark.zip (see _zipcache).
+if (_sys.implementation.name == "cpython"
+        and (3, 10) <= _sys.version_info[:2] < (3, 12)
+        and "pyspark" in _sys.modules):
+    from pyspark import TaskContext as _TaskContext
+
+    if _TaskContext.get() is not None:
+        from . import _zipcache
+
+        _zipcache.install()
 
 __all__ = ["SketchParams", "LSHParams", "PipelineConfig"]
 __version__ = "0.1.0"

@@ -24,6 +24,8 @@ boilerplate-heavy hot buckets):
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -113,7 +115,8 @@ def candidate_pairs(sketches: DataFrame, band_doc_cap: int = 1000,
     affected docs).
 
     ``eager``/``checkpoint`` are RETAINED FOR API COMPATIBILITY but are
-    no-ops since round 6: earlier rounds eagerly localCheckpointed the
+    no-ops since round 6, and a non-default value warns
+    ``DeprecationWarning``. Earlier rounds eagerly localCheckpointed the
     band relation and the bucket-size table to stop concurrent AQE
     exchange-materialization jobs racing on a lazy checkpoint's lock
     (a measured 17 s zero-CPU stall). Round-6 re-measure: with no
@@ -129,7 +132,11 @@ def candidate_pairs(sketches: DataFrame, band_doc_cap: int = 1000,
     2 cores 39.7-45.9 -> 35.0-38.9. Callers that collect ``metrics``
     later re-run the cheap explode+groupBy — rare and off the hot path.
     """
-    del eager, checkpoint  # no-ops since round 6 (see docstring)
+    if eager or not checkpoint:
+        warnings.warn(
+            "candidate_pairs: 'eager' and 'checkpoint' have no effect "
+            "and will be removed; stop passing them",
+            DeprecationWarning, stacklevel=2)
     bands = explode_bands(sketches)
 
     # bucket sizes via groupBy, NOT a window: groupBy does map-side

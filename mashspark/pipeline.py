@@ -192,7 +192,6 @@ def _cluster_sketches(spark: SparkSession, sketches: DataFrame,
         reps,
         band_doc_cap=config.lsh.band_doc_cap,
         hard_bucket_cap=config.lsh.hard_bucket_cap,
-        eager=True,
     )
     pairs = _verify.verify_pairs(
         cand,

@@ -53,6 +53,7 @@ import os
 import shutil
 import time
 import uuid
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -150,6 +151,14 @@ def _publish_snapshot(table_path: str, version: int, entry: dict) -> bool:
         os.unlink(tmp)
 
 
+def _iso_local(epoch_s: float) -> str:
+    """Local time as fixed-width ISO with microseconds. Fixed width keeps
+    string order equal to time order, also against the second-resolution
+    ``committed_at`` of snapshots written before microseconds were
+    stamped ('...:05' < '...:05.000001')."""
+    return datetime.fromtimestamp(epoch_s).strftime("%Y-%m-%dT%H:%M:%S.%f")
+
+
 def _commit(spark: SparkSession, df: DataFrame, table_path: str,
             operation: str, summary: dict | None,
             retries: int = 5, expected_parent: int | None | str = "any",
@@ -205,7 +214,7 @@ def _commit(spark: SparkSession, df: DataFrame, table_path: str,
             "summary": {
                 "n_rows_written": n_rows,
                 "input": lineage,
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
+                "committed_at": _iso_local(time.time()),
                 **(summary or {}),
             },
         }
@@ -272,10 +281,10 @@ def commit_merge(spark: SparkSession, updates: DataFrame, table_path: str,
 def version_as_of(table_path: str, ts) -> int:
     """Iceberg ``FOR TIMESTAMP AS OF`` analog: the highest version in
     CURRENT's ancestry whose commit time is <= ``ts`` (ISO
-    'YYYY-mm-ddTHH:MM:SS' string, or epoch seconds). Raises
+    'YYYY-mm-ddTHH:MM:SS[.ffffff]' string, or epoch seconds). Raises
     ``ValueError`` when the table has no snapshot that old."""
     if isinstance(ts, (int, float)):
-        ts = time.strftime("%Y-%m-%dT%H:%M:%S", time.localtime(ts))
+        ts = _iso_local(ts)
     cur = current_version(table_path)
     if cur is None:
         raise FileNotFoundError(f"{table_path} has no committed snapshot")

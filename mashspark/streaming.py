@@ -129,12 +129,9 @@ class IncrementalDeduper:
         sk = sketch_documents(batch_df, cfg.sketch, cfg.lsh).persist()
 
         # candidate pairs: in-batch LSH self-join ...
-        # checkpoint=False: same foreachBatch constraint as the persist
-        # above — candidate_pairs' internal localCheckpoints must not
-        # run inside the micro-batch callback
         cand_self, _m = _lsh.candidate_pairs(
             sk, band_doc_cap=cfg.lsh.band_doc_cap,
-            hard_bucket_cap=cfg.lsh.hard_bucket_cap, checkpoint=False,
+            hard_bucket_cap=cfg.lsh.hard_bucket_cap,
         )
         pair_sources = [cand_self]
         union_sk = sk

@@ -127,6 +127,29 @@ def test_lsh_metrics_shape(result):
     assert row.n_dropped_buckets == 0
 
 
+def test_candidate_pairs_warns_on_noop_params(spark):
+    """``eager``/``checkpoint`` do nothing; passing a non-default value
+    warns once, the defaults stay silent, and the pairs are the same."""
+    import warnings
+
+    from mashspark.lsh import candidate_pairs
+
+    sk = spark.createDataFrame(
+        [(1, [10, 20]), (2, [10, 30]), (3, [40, 20])],
+        "doc_id long, band_key array<long>")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", DeprecationWarning)
+        want = {tuple(r) for r in candidate_pairs(sk)[0].collect()}
+    assert want == {(1, 2), (1, 3)}
+    for kwargs in ({"eager": True}, {"checkpoint": False},
+                   {"eager": True, "checkpoint": False}):
+        with pytest.warns(DeprecationWarning, match="eager") as rec:
+            cand, _m = candidate_pairs(sk, **kwargs)
+        assert len([w for w in rec
+                    if issubclass(w.category, DeprecationWarning)]) == 1
+        assert {tuple(r) for r in cand.collect()} == want
+
+
 def test_sketch_arrow_matches_pandas(spark):
     """Round-6: sketch_documents switched to the mapInArrow generator —
     pin bit-identity against the pandas UDF path across null text, short

@@ -250,3 +250,45 @@ def test_time_travel_as_of_timestamp(spark, tmp_path):
         snap.version_as_of(t, 0.0)  # epoch 1970: nothing that old
     with pytest.raises(ValueError):
         snap.read_table(spark, t, version=1, as_of=after)
+
+
+class _PinnedClock:
+    """Stands in for the ``time`` module ``snapshots`` reads, with a
+    wall clock the test sets; everything else is the real module."""
+
+    def __init__(self, now):
+        import time as _t
+
+        self._t = _t
+        self.now = now
+
+    def time(self):
+        return self.now
+
+    def localtime(self, secs=None):
+        return self._t.localtime(self.now if secs is None else secs)
+
+    def strftime(self, fmt, tt=None):
+        return self._t.strftime(fmt, self.localtime() if tt is None else tt)
+
+    def __getattr__(self, name):
+        return getattr(self._t, name)
+
+
+def test_time_travel_within_one_second(spark, tmp_path, monkeypatch):
+    """Two commits inside one wall-clock second with a probe between
+    them: the probe resolves to the first (committed_at must carry
+    sub-second resolution, and an epoch probe must be formatted the same
+    way)."""
+    t = str(tmp_path / "tbl")
+    t0 = 1_700_000_000.0
+    clock = _PinnedClock(t0 + 0.2)
+    monkeypatch.setattr(snap, "time", clock)
+    snap.commit_append(spark, _df(spark, 0, 10), t)
+    clock.now = t0 + 0.6
+    snap.commit_append(spark, _df(spark, 10, 25), t)
+    assert snap.version_as_of(t, t0 + 0.4) == 1
+    assert snap.version_as_of(t, t0 + 0.6) == 2
+    assert snap.read_table(spark, t, as_of=t0 + 0.4).count() == 10
+    with pytest.raises(ValueError):
+        snap.version_as_of(t, t0 + 0.1)

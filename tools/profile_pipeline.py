@@ -84,7 +84,7 @@ def main() -> None:
         reps = sketches.join(rep_ids, "doc_id", "left_semi")
         cand, _m = _lsh.candidate_pairs(
             reps, band_doc_cap=cfg.lsh.band_doc_cap,
-            hard_bucket_cap=cfg.lsh.hard_bucket_cap, eager=True)
+            hard_bucket_cap=cfg.lsh.hard_bucket_cap)
         cand = cand.localCheckpoint(eager=True)
         out["n_candidates"] = cand.count()
         return reps, cand, eg
