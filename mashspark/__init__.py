@@ -6,7 +6,7 @@ Layering (SURVEY.md §7):
 
 * numpy core, no Spark:  ``hashing`` ``minhash`` ``compare`` (``dna`` is
   golden-test-only DNA support)
-* Spark DataFrame layer: ``sketch`` (vectorized pandas UDFs), ``lsh``
+* Spark DataFrame layer: ``sketch`` (one mapInArrow generator), ``lsh``
   (banded candidate join + skew salting), ``verify`` (Mash-exact pair
   verification), ``cc`` (large/small-star connected components),
   ``screen`` (containment), ``pipeline`` (end-to-end dedup),

@@ -800,7 +800,8 @@ def build_parser() -> argparse.ArgumentParser:
         prog="mashspark", description=__doc__,
         formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--cores", type=int, default=None,
-                    help="local[N] cores (default: SPARK_GRAFT_CPUS or 32)")
+                    help="local[N] cores (default: SPARK_GRAFT_CPUS, else the "
+                         "CPUs this process may run on)")
     sub = ap.add_subparsers(dest="command", required=True)
 
     p = sub.add_parser("sketch", help="docs -> committed sketch table (resumable)")

@@ -176,18 +176,6 @@ def capped_merge_sorted_batch(arrs_a: list, arrs_b: list, sketch_size: int):
     return common, denom
 
 
-def capped_merge_batch(sk_a: list, sk_b: list, sketch_size: int):
-    """Vectorized-ish batch of capped merges; returns (common, denom) int64 arrays."""
-    n = len(sk_a)
-    common = np.zeros(n, dtype=np.int64)
-    denom = np.zeros(n, dtype=np.int64)
-    for i in range(n):
-        c, d = capped_merge(sk_a[i], sk_b[i], sketch_size)
-        common[i] = c
-        denom[i] = d
-    return common, denom
-
-
 def jaccard(common, denom):
     common = np.asarray(common, dtype=np.float64)
     denom = np.asarray(denom, dtype=np.float64)

@@ -224,7 +224,7 @@ def hash_shingles_concat(buf: np.ndarray, k: int, seed: int,
 
     Returns (len(buf)-k+1,) uint64. Callers batching many documents
     concatenate their bytes and discard the k-1 boundary-crossing windows
-    per document (see ``minhash.sketch_batch``) — one vectorized murmur pass
+    per document (see ``minhash.sketch_concat``) — one vectorized murmur pass
     per Arrow batch instead of one per document.
 
     Kernel shape (round-6 rewrite, bit-identical to the window-matrix

@@ -74,39 +74,52 @@ def sketch_text_bytes(data: bytes, k: int, s: int, seed: int,
     return bottom_k(h, s, min_cov=min_cov, with_counts=with_counts)
 
 
-def sketch_batch(texts, k: int, s: int, seed: int, min_cov: int = 1):
-    """Sketch a batch of python/bytes strings with ONE murmur pass.
+def sketch_concat(buf: np.ndarray, lens, k: int, s: int, seed: int,
+                  min_cov: int = 1, with_counts: bool = False):
+    """Sketch a batch of documents laid end to end in one uint8 buffer.
 
-    Concatenates all documents' UTF-8 bytes, hashes every sliding window of
-    the concatenation in a single vectorized call, then slices per-document
-    segments (windows that straddle a document boundary fall in the k-1
-    tail of each segment and are excluded by construction).
+    The one sketch kernel: every caller that sketches more than a single
+    byte string comes through here. ``lens`` holds each document's byte
+    length. ONE murmur pass hashes every window of the concatenation; each
+    document's bottom-k reads only its own ``len - k + 1`` windows (the k-1
+    windows that straddle a boundary fall past the end of each segment).
+    Documents shorter than k get an empty sketch and 0 k-mers (the
+    reference skips such records, ``Sketch.cpp:337-341``).
+
+    Returns ``(sketches, n_kmers, card_est, counts)``: a list of uint64
+    arrays, two int64 arrays, and with ``with_counts`` a list of int32
+    multiplicities aligned with the sketches (else None). ``card_est`` is
+    the KMV estimate of a full sketch and the exact distinct count of a
+    partial one.
+    """
+    lens = np.asarray(lens, dtype=np.int64)
+    n_kmers = np.maximum(lens - (k - 1), 0)
+    starts = np.cumsum(lens) - lens
+    all_h = hash_shingles_concat(buf, k, seed)
+    sketches, cards = [], []
+    counts = [] if with_counts else None
+    for lo, nk in zip(starts.tolist(), n_kmers.tolist()):
+        got = bottom_k(all_h[lo : lo + nk], s, min_cov=min_cov,
+                       with_counts=with_counts)
+        if with_counts:
+            sk, cnt = got
+            counts.append(cnt)
+        else:
+            sk = got
+        sketches.append(sk)
+        cards.append(kmv_set_size(sk) if len(sk) >= s else len(sk))
+    return sketches, n_kmers, np.array(cards, dtype=np.int64), counts
+
+
+def sketch_batch(texts, k: int, s: int, seed: int, min_cov: int = 1):
+    """Sketch a batch of python/bytes strings: UTF-8 encode, concatenate,
+    ``sketch_concat``.
 
     Returns list of (sketch uint64[<=s], n_kmers int, n_distinct_est int).
-    Documents shorter than k get an empty sketch (reference skips records
-    shorter than k, ``Sketch.cpp:337-341``).
     """
-    bufs = []
-    lens = []
-    for t in texts:
-        b = t if isinstance(t, (bytes, bytearray)) else str(t).encode("utf-8")
-        bufs.append(np.frombuffer(bytes(b), dtype=np.uint8))
-        lens.append(len(b))
-    if not bufs:
-        return []
-    big = np.concatenate(bufs) if len(bufs) > 1 else bufs[0]
-    all_h = hash_shingles_concat(big, k, seed)
-
-    out = []
-    off = 0
-    n_windows = len(all_h)
-    for blen in lens:
-        if blen < k:
-            out.append((np.empty(0, dtype=np.uint64), 0, 0))
-        else:
-            nk = blen - k + 1
-            seg = all_h[off : off + nk] if off < n_windows else all_h[0:0]
-            sk = bottom_k(seg, s, min_cov=min_cov)
-            out.append((sk, nk, kmv_set_size(sk) if len(sk) >= s else len(sk)))
-        off += blen
-    return out
+    data = [t if isinstance(t, (bytes, bytearray)) else str(t).encode("utf-8")
+            for t in texts]
+    sketches, n_kmers, cards, _ = sketch_concat(
+        np.frombuffer(b"".join(data), dtype=np.uint8), [len(b) for b in data],
+        k, s, seed, min_cov)
+    return list(zip(sketches, n_kmers.tolist(), cards.tolist()))

@@ -18,10 +18,16 @@ def _task_cpus(cores: int) -> int:
     return min(max(int(os.environ.get("MASHSPARK_TASK_CPUS", "1")), 1), cores)
 
 
+def _default_cores() -> int:
+    """``SPARK_GRAFT_CPUS``, else the number of CPUs this process may run
+    on (its affinity mask, not the machine's CPU count)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
 def get_spark(cores: int | None = None, shuffle_partitions: int | None = None,
               app_name: str = "mashspark", extra_conf: dict | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = _default_cores()
     # Python UDF workers inherit this env (forked under the JVM): keep
     # glibc from mmap-ing/returning large Arrow-batch buffers on every
     # free — this host pays pathological first-touch page-fault costs that

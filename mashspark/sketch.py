@@ -1,12 +1,13 @@
 """Spark sketching stage: documents -> bottom-k sketches + LSH band keys.
 
-One vectorized Arrow/pandas UDF does normalize-free shingling, a SINGLE
-murmur3 pass over the whole batch's concatenated bytes, per-doc bottom-k
-distinct selection (Mash ``MinHashHeap`` semantics, see ``minhash.py``),
-the KMV cardinality estimate, and residue-class band keys — no per-row
-Python, no shuffle (map-only stage; this is why sketching scales linearly
-with executors, replacing the reference's thread pool at
-``Sketch.cpp:211,354``).
+One ``mapInArrow`` generator (``make_sketch_arrow_gen``) reads each Arrow
+batch's text buffer as-is and hands it to the sketch kernel
+(``minhash.sketch_concat``: a SINGLE murmur3 pass over the batch's
+concatenated bytes, per-doc bottom-k distinct selection with Mash
+``MinHashHeap`` semantics, the KMV cardinality estimate), then adds
+residue-class band keys and fp128 through their batch kernels — no shuffle
+(map-only stage; this is why sketching scales linearly with executors,
+replacing the reference's thread pool at ``Sketch.cpp:211,354``).
 
 Sketch hashes are stored sign-flip-encoded int64 (``hashing.encode_signed``)
 so Spark-native ordering equals Mash's unsigned ordering.
@@ -15,15 +16,13 @@ so Spark-native ordering equals Mash's unsigned ordering.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StructField, StructType)
 
-from .hashing import _fmix64, encode_signed, hash_shingles_concat
-from .minhash import bottom_k, kmv_set_size
+from .hashing import _fmix64, encode_signed
+from .minhash import sketch_concat
 from .params import LSHParams, SketchParams
 
 _GOLD = np.uint64(0x9E3779B97F4A7C15)
@@ -162,51 +161,6 @@ def batch_fp128(sketches: list):
     return fp1, fp2
 
 
-def make_sketch_udf(params: SketchParams, lsh: LSHParams):
-    k, s, seed, min_cov = params.k, params.s, params.seed, params.min_cov
-    bands, prefix = lsh.bands, lsh.prefix
-
-    @pandas_udf(SKETCH_FIELDS)
-    def sketch_udf(texts: pd.Series) -> pd.DataFrame:
-        vals = texts.fillna("").astype(str).tolist()
-        bufs = [np.frombuffer(t.encode("utf-8"), dtype=np.uint8) for t in vals]
-        lens = [len(b) for b in bufs]
-        big = np.concatenate(bufs) if bufs else np.empty(0, dtype=np.uint8)
-        all_h = hash_shingles_concat(big, k, seed)
-
-        n_rows = len(lens)
-        raw_sketches, sketches = [], []
-        n_kmers = np.zeros(n_rows, dtype=np.int64)
-        cards = np.zeros(n_rows, dtype=np.int64)
-        off = 0
-        for i, blen in enumerate(lens):
-            if blen < k:
-                sk = np.empty(0, dtype=np.uint64)
-                nk = 0
-            else:
-                nk = blen - k + 1
-                sk = bottom_k(all_h[off : off + nk], s, min_cov=min_cov)
-            off += blen
-            n_kmers[i] = nk
-            cards[i] = kmv_set_size(sk) if len(sk) >= s else len(sk)
-            raw_sketches.append(sk)
-            sketches.append(encode_signed(sk).tobytes())  # int64 IS <i8 here (LE asserted)
-        bkeys = batch_band_keys(raw_sketches, bands, prefix)
-        fp1, fp2 = batch_fp128(raw_sketches)
-        return pd.DataFrame(
-            {
-                "sketch": sketches,
-                "n_kmers": n_kmers,
-                "card_est": cards,
-                "band_key": bkeys,
-                "fp1": fp1,
-                "fp2": fp2,
-            }
-        )
-
-    return sketch_udf
-
-
 COUNT_SKETCH_FIELDS = StructType(
     [
         StructField("sketch", BinaryType(), False),
@@ -219,228 +173,138 @@ COUNT_SKETCH_FIELDS = StructType(
 )
 
 
-def make_minhash_count_udf(params: SketchParams):
-    """SURVEY §2.8 ``minhash_count_udf``: text -> struct<sketch, counts,
-    n_kmers, card_est> — the A1 bottom-k sketch WITH per-hash multiplicities
-    (reference reads-mode ``-M``/``-m``, ``MinHashHeap.cpp:96-118``,
-    ``HashSet.cpp:48-76``). Same single-murmur-pass batch layout as
-    ``make_sketch_udf``; counts feed the coverage estimate (A6,
-    ``MinHashHeap.h:44``) and the count histogram (A7,
-    ``CommandInfo.cpp:187-220``)."""
-    k, s, seed, min_cov = params.k, params.s, params.seed, params.min_cov
-
-    @pandas_udf(COUNT_SKETCH_FIELDS)
-    def minhash_count_udf(texts: pd.Series) -> pd.DataFrame:
-        vals = texts.fillna("").astype(str).tolist()
-        bufs = [np.frombuffer(t.encode("utf-8"), dtype=np.uint8) for t in vals]
-        lens = [len(b) for b in bufs]
-        big = np.concatenate(bufs) if bufs else np.empty(0, dtype=np.uint8)
-        all_h = hash_shingles_concat(big, k, seed)
-
-        n_rows = len(lens)
-        sketches, counts_col = [], []
-        n_kmers = np.zeros(n_rows, dtype=np.int64)
-        cards = np.zeros(n_rows, dtype=np.int64)
-        off = 0
-        for i, blen in enumerate(lens):
-            if blen < k:
-                sk = np.empty(0, dtype=np.uint64)
-                cnt = np.empty(0, dtype=np.int32)
-                nk = 0
-            else:
-                nk = blen - k + 1
-                sk, cnt = bottom_k(
-                    all_h[off : off + nk], s, min_cov=min_cov, with_counts=True
-                )
-            off += blen
-            n_kmers[i] = nk
-            cards[i] = kmv_set_size(sk) if len(sk) >= s else len(sk)
-            sketches.append(encode_signed(sk).tobytes())  # int64 IS <i8 here (LE asserted)
-            counts_col.append(cnt)
-        return pd.DataFrame(
-            {
-                "sketch": sketches,
-                "counts": counts_col,
-                "n_kmers": n_kmers,
-                "card_est": cards,
-            }
-        )
-
-    return minhash_count_udf
-
-
-def sketch_documents_with_counts(df: DataFrame, params: SketchParams,
-                                 id_col: str = "doc_id",
-                                 text_col: str = "text") -> DataFrame:
-    """documents -> (doc_id, sketch, counts, n_kmers, card_est). Map-only,
-    like ``sketch_documents`` but with multiplicities kept (A2)."""
-    udf = make_minhash_count_udf(params)
-    return (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        .withColumn("_sk", udf(F.col("text")))
-        .select(
-            "doc_id",
-            F.col("_sk.sketch").alias("sketch", metadata=_params_meta(params)),
-            F.col("_sk.counts").alias("counts"),
-            F.col("_sk.n_kmers").alias("n_kmers"),
-            F.col("_sk.card_est").alias("card_est"),
-        )
-    )
-
-
 def _params_meta(params: SketchParams) -> dict:
     from .params import PARAMS_META_KEY
 
     return {PARAMS_META_KEY: params.to_dict()}
 
 
-def make_sketch_arrow_gen(params: SketchParams, lsh: LSHParams,
-                          id_col: str = "doc_id", text_col: str = "text"):
-    """mapInArrow generator: RecordBatch(doc_id, text) -> RecordBatch(
-    doc_id, sketch, n_kmers, card_est, band_key, fp1, fp2).
+def _offsets(lengths) -> np.ndarray:
+    """Arrow int32 offsets (n+1, starting at 0) for per-row lengths."""
+    offs = np.zeros(len(lengths) + 1, dtype=np.int32)
+    np.cumsum(lengths, out=offs[1:])
+    return offs
 
-    Why Arrow-native instead of a pandas UDF: the UDF's numpy core is
-    ~flat across parallelism, but the pandas wrapping was measured to
-    stall workers between batches — materializing every document as a
-    Python str on input and every 8 KB sketch as a Python bytes on output
-    is per-doc interpreter work plus an extra copy each way. Here the
-    input text is read straight out of the Arrow string buffer (the
-    offsets+data layout IS the concatenated-bytes layout the one-pass
-    murmur wants, zero copies), and the output sketch/band columns are
-    built zero-copy from numpy buffers.
+
+def make_sketch_arrow_gen(params: SketchParams, lsh: LSHParams | None):
+    """mapInArrow generator: every input column but ``text`` passes through
+    unchanged, then the sketch columns of ``text`` are appended — with
+    ``lsh``, ``SKETCH_FIELDS`` (band keys and fp128 for dedup); with
+    ``lsh=None``, ``COUNT_SKETCH_FIELDS`` (per-hash multiplicities, the
+    reference's ``-M``).
+
+    The text is read straight out of the Arrow string buffer: its
+    offsets+data layout IS the concatenated-bytes layout the sketch kernel
+    wants. The sketch, band-key and counts columns are built from numpy
+    buffers. No per-document Python objects cross the boundary either way.
     """
     import pyarrow as pa
 
     k, s, seed, min_cov = params.k, params.s, params.seed, params.min_cov
-    bands, prefix = lsh.bands, lsh.prefix
+    with_counts = lsh is None
+    added = (COUNT_SKETCH_FIELDS if with_counts else SKETCH_FIELDS).names
 
     def gen(batches):
         for batch in batches:
             n_rows = batch.num_rows
             if n_rows == 0:
                 continue
-            ids = batch.column(id_col)
-            txt = batch.column(text_col)
-            if isinstance(txt, pa.ChunkedArray):
-                txt = txt.combine_chunks()
+            txt = batch.column("text")
             if txt.null_count:
                 txt = txt.fill_null("")
             if pa.types.is_large_string(txt.type):
                 txt = txt.cast(pa.string())
             bufs = txt.buffers()
-            all_offs = np.frombuffer(bufs[1], dtype=np.int32)
-            offs = all_offs[txt.offset : txt.offset + n_rows + 1]
+            offs = np.frombuffer(bufs[1], dtype=np.int32)[
+                txt.offset : txt.offset + n_rows + 1]
             data = np.frombuffer(bufs[2], dtype=np.uint8)
             # one explicit copy into process-heap memory: repeated reads
             # from the Arrow-allocated buffer are ~11x slower on this host
             # (measured) — the copy is 2 MB/batch and pays for itself in
             # the first murmur chunk
             big = data[offs[0] : offs[-1]].copy()
-            lens = np.diff(offs)
+            sks, n_kmers, cards, counts = sketch_concat(
+                big, np.diff(offs), k, s, seed, min_cov, with_counts)
 
-            all_h = hash_shingles_concat(big, k, seed)
-
-            # per-row: only the bottom-k itself. Band keys and fp128 go
-            # through their BATCH kernels (one stable argsort/reduceat
-            # over the whole batch, bit-identical to the per-doc forms —
-            # asserted by tests): the per-doc calls were ~2/3 of this
-            # generator's CPU (profiled round 4: 0.89 s of 1.31 s at
-            # 5k docs — the round-3 q1 sketch regression).
-            raw_sks, sk_parts = [], []
-            sk_offs = np.zeros(n_rows + 1, dtype=np.int32)
-            bk_offs = np.zeros(n_rows + 1, dtype=np.int32)
-            n_kmers = np.zeros(n_rows, dtype=np.int64)
-            cards = np.zeros(n_rows, dtype=np.int64)
-            off = 0
-            for i in range(n_rows):
-                blen = int(lens[i])
-                if blen < k:
-                    sk = np.empty(0, dtype=np.uint64)
-                    nk = 0
-                else:
-                    nk = blen - k + 1
-                    sk = bottom_k(all_h[off : off + nk], s, min_cov=min_cov)
-                off += blen
-                n_kmers[i] = nk
-                cards[i] = kmv_set_size(sk) if len(sk) >= s else len(sk)
-                raw_sks.append(sk)
-                sk_parts.append(encode_signed(sk))
-                sk_offs[i + 1] = sk_offs[i] + 8 * len(sk)
-            bkeys = batch_band_keys(raw_sks, bands, prefix)
-            fp1, fp2 = batch_fp128(raw_sks)
-            bk_parts = bkeys
-            for i in range(n_rows):
-                bk_offs[i + 1] = bk_offs[i] + len(bkeys[i])
-
-            sk_values = (
-                np.concatenate(sk_parts).view(np.uint8)  # int64 IS <i8 (LE)
-                if sk_parts else np.empty(0, dtype=np.uint8)
-            )
-            bk_values = (
-                np.concatenate(bk_parts) if bk_parts else np.empty(0, dtype=np.int64)
-            )
+            sk_values = encode_signed(
+                np.concatenate(sks)).view(np.uint8)  # int64 IS <i8 (LE)
             sketch_arr = pa.Array.from_buffers(
                 pa.binary(), n_rows,
-                [None, pa.py_buffer(sk_offs), pa.py_buffer(sk_values)],
+                [None, pa.py_buffer(_offsets([8 * len(sk) for sk in sks])),
+                 pa.py_buffer(sk_values)],
             )
-            band_arr = pa.ListArray.from_arrays(
-                pa.array(bk_offs, type=pa.int32()),
-                pa.array(bk_values, type=pa.int64()),
-            )
+            cols = {
+                "sketch": sketch_arr,
+                "n_kmers": pa.array(n_kmers, type=pa.int64()),
+                "card_est": pa.array(cards, type=pa.int64()),
+            }
+            if with_counts:
+                cols["counts"] = pa.ListArray.from_arrays(
+                    pa.array(_offsets([len(c) for c in counts])),
+                    pa.array(np.concatenate(counts), type=pa.int32()))
+            else:
+                # band keys and fp128 through their BATCH kernels (one
+                # stable argsort/reduceat over the whole batch): the
+                # per-doc forms were ~2/3 of this generator's CPU
+                bkeys = batch_band_keys(sks, lsh.bands, lsh.prefix)
+                fp1, fp2 = batch_fp128(sks)
+                cols["band_key"] = pa.ListArray.from_arrays(
+                    pa.array(_offsets([len(b) for b in bkeys])),
+                    pa.array(np.concatenate(bkeys), type=pa.int64()))
+                cols["fp1"] = pa.array(fp1, type=pa.int64())
+                cols["fp2"] = pa.array(fp2, type=pa.int64())
+            kept = [n for n in batch.schema.names if n != "text"]
             yield pa.RecordBatch.from_arrays(
-                [
-                    ids.cast(pa.int64()),
-                    sketch_arr,
-                    pa.array(n_kmers, type=pa.int64()),
-                    pa.array(cards, type=pa.int64()),
-                    band_arr,
-                    pa.array(fp1, type=pa.int64()),
-                    pa.array(fp2, type=pa.int64()),
-                ],
-                names=["doc_id", "sketch", "n_kmers", "card_est",
-                       "band_key", "fp1", "fp2"],
+                [batch.column(n) for n in kept] + [cols[n] for n in added],
+                names=kept + added,
             )
 
     return gen
+
+
+def map_sketches(df: DataFrame, params: SketchParams,
+                 lsh: LSHParams | None) -> DataFrame:
+    """``make_sketch_arrow_gen`` over ``df``, which has a string ``text``
+    column: every other column keeps its type and nullability, and the
+    sketch columns follow. Map-only."""
+    added = COUNT_SKETCH_FIELDS if lsh is None else SKETCH_FIELDS
+    schema = StructType(
+        [f for f in df.schema.fields if f.name != "text"] + added.fields)
+    return df.mapInArrow(make_sketch_arrow_gen(params, lsh), schema=schema)
+
+
+def sketch_documents_with_counts(df: DataFrame, params: SketchParams,
+                                 id_col: str = "doc_id",
+                                 text_col: str = "text") -> DataFrame:
+    """documents -> (doc_id, sketch, counts, n_kmers, card_est). Map-only,
+    like ``sketch_documents`` but with each surviving hash's multiplicity
+    kept (A2; reference reads-mode ``-M``/``-m``, ``MinHashHeap.cpp:96-118``,
+    ``HashSet.cpp:48-76``). The counts feed the coverage estimate (A6,
+    ``MinHashHeap.h:44``) and the count histogram (A7,
+    ``CommandInfo.cpp:187-220``)."""
+    docs = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    return map_sketches(docs, params, None).withMetadata(
+        "sketch", _params_meta(params))
 
 
 def sketch_documents(df: DataFrame, params: SketchParams, lsh: LSHParams,
                      id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """documents -> (doc_id, sketch, n_kmers, card_est, band_key, fp1, fp2).
 
-    Map-only, one vectorized Arrow pass (``make_sketch_arrow_gen``). Docs
-    shorter than k yield an EMPTY sketch inside the UDF (reference skips
-    such records, ``Sketch.cpp:337-341``); they stay in the output as
-    unsketchable rows so downstream cluster assignment keeps them as
-    singletons.
-
-    Round-6 reversal of the round-4 mapInArrow rejection: with the u64
-    murmur kernel and lean bottom_k the numpy core got ~2x faster, so the
-    pandas wrapping (per-doc str materialization in, per-doc bytes out)
-    became the larger share — re-measured at 12 cores on the 70k-doc
-    bench corpus: arrow 1.85 s vs pandas 2.35 s noop-isolated, rows
-    bit-identical (pinned by test_sketch_arrow_matches_pandas). The
-    pandas UDF (``make_sketch_udf``) remains for callers that need it.
+    Map-only: one ``mapInArrow`` pass of ``make_sketch_arrow_gen``.
+    ``doc_id`` is cast to long. Docs shorter than k (null text counts as
+    empty) yield an EMPTY sketch (the reference skips such records,
+    ``Sketch.cpp:337-341``); they stay in the output as unsketchable rows
+    so downstream cluster assignment keeps them as singletons. The params
+    fingerprint rides in the ``sketch`` column's metadata so downstream
+    comparisons can refuse incompatible tables (F6, ``Sketch.cpp:133-160``).
     """
-    from pyspark.sql.types import StructField, StructType
-
-    gen = make_sketch_arrow_gen(params, lsh)
-    out_schema = StructType(
-        [StructField("doc_id", LongType(), False)] + list(SKETCH_FIELDS.fields)
-    )
-    out = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        .mapInArrow(gen, schema=out_schema)
-        .select(
-            "doc_id",
-            # params fingerprint rides in the column metadata so downstream
-            # comparisons can refuse incompatible tables (F6, Sketch.cpp:133-160)
-            F.col("sketch").alias("sketch", metadata=_params_meta(params)),
-            "n_kmers",
-            "card_est",
-            "band_key",
-            "fp1",
-            "fp2",
-        )
-    )
-    return out
+    docs = df.select(F.col(id_col).cast("long").alias("doc_id"),
+                     F.col(text_col).alias("text"))
+    # declared NOT NULL, unlike map_sketches' carried columns: the schema
+    # this function has always returned
+    schema = StructType(
+        [StructField("doc_id", LongType(), False)] + SKETCH_FIELDS.fields)
+    return docs.mapInArrow(make_sketch_arrow_gen(params, lsh),
+                           schema=schema).withMetadata(
+        "sketch", _params_meta(params))

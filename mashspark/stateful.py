@@ -233,10 +233,10 @@ def stateful_band_dedup(stream_df: DataFrame, params: SketchParams,
     parquet; this shape suits dedup horizons that fit state, e.g. a
     rolling crawl window).
 
-    Each doc is sketched in-stream (same vectorized sketch UDF as the
-    batch path), exploded to its LSH band keys, and each band group
-    verifies arrivals against its register of (doc_id, ``prefix_len``
-    bottom-k prefix) entries via the batch pipeline's capped-merge
+    Each doc is sketched in-stream (the batch path's sketch generator),
+    exploded to its LSH band keys, and each band group verifies arrivals
+    against its register of (doc_id, ``prefix_len`` bottom-k prefix)
+    entries via the batch pipeline's capped-merge
     kernel, emitting ``(doc_id, matched_id, band_key, common, denom,
     est_jaccard)`` for estimates >= ``jaccard_threshold``. A pair found
     by several bands emits once per band — deduplicate downstream with
@@ -328,20 +328,15 @@ def stateful_band_dedup(stream_df: DataFrame, params: SketchParams,
                 "est_jaccard": common_arr / denom_arr,
             })
 
-    # same vectorized sketch UDF as the batch path, applied inline so the
-    # event-time column survives (sketch_documents projects it away, and
+    # the batch path's sketch generator, applied inline so the event-time
+    # column passes through (sketch_documents projects it away, and
     # re-attaching it would be a stream-stream join)
-    from .sketch import make_sketch_udf
+    from .sketch import map_sketches
 
-    udf = make_sketch_udf(params, lsh)
-    sk = (
+    sk = map_sketches(
         stream_df.select(F.col(id_col).alias("doc_id"),
-                         F.col(text_col).alias("text"), F.col(ts_col))
-        .withColumn("_sk", udf(F.col("text")))
-        .select("doc_id", ts_col,
-                F.col("_sk.sketch").alias("sketch"),
-                F.col("_sk.band_key").alias("band_key"))
-    )
+                         F.col(text_col).alias("text"), F.col(ts_col)),
+        params, lsh)
     exploded = (
         sk.filter(F.size("band_key") > 0)
         .select(

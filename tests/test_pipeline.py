@@ -150,39 +150,42 @@ def test_candidate_pairs_warns_on_noop_params(spark):
         assert {tuple(r) for r in cand.collect()} == want
 
 
-def test_sketch_arrow_matches_pandas(spark):
-    """Round-6: sketch_documents switched to the mapInArrow generator —
-    pin bit-identity against the pandas UDF path across null text, short
-    docs (< k), empty docs, and non-default column names."""
-    from pyspark.sql import functions as F
-
-    from mashspark.params import LSHParams, SketchParams
-    from mashspark.sketch import make_sketch_udf, sketch_documents
+def test_sketch_documents_matches_numpy_reference(spark):
+    """sketch_documents (the mapInArrow generator) against the scalar
+    numpy reference, row by row, across null text, empty docs, docs
+    shorter than k, a doc of exactly k bytes, unicode, a full sketch (the
+    KMV card_est branch) and non-default column names."""
+    from mashspark.hashing import encode_signed
+    from mashspark.minhash import kmv_set_size, sketch_text_bytes
+    from mashspark.sketch import (compute_band_keys, sketch_documents,
+                                  sketch_fp128)
 
     rows = [(1, "the quick brown fox jumps over the lazy dog " * 30),
             (2, None), (3, ""), (4, "tiny"), (5, "x" * 21),
             (6, "the quick brown fox jumps over the lazy dog " * 30),
-            (7, "unicode éèê content " * 40)]
+            (7, "unicode éèê content " * 40),
+            (8, " ".join("w%d" % i for i in range(400)))]
     docs = spark.createDataFrame(rows, "my_id long, body string")
     sp, lp = SketchParams(s=64), LSHParams(prefix=32)
 
-    arrow = sketch_documents(docs, sp, lp, id_col="my_id", text_col="body")
-    udf = make_sketch_udf(sp, lp)
-    pandas = (
-        docs.select(F.col("my_id").alias("doc_id"), F.col("body").alias("text"))
-        .withColumn("_sk", udf(F.col("text")))
-        .select("doc_id", "_sk.sketch", "_sk.n_kmers", "_sk.card_est",
-                "_sk.band_key", "_sk.fp1", "_sk.fp2")
-    )
-    a = {r["doc_id"]: r for r in arrow.collect()}
-    p = {r["doc_id"]: r for r in pandas.collect()}
-    assert set(a) == set(p)
-    for d in a:
-        ra, rp = a[d], p[d]
-        assert bytes(ra["sketch"]) == bytes(rp["sketch"]), d
-        assert ra["n_kmers"] == rp["n_kmers"] and ra["card_est"] == rp["card_est"]
-        assert list(ra["band_key"]) == list(rp["band_key"]), d
-        assert ra["fp1"] == rp["fp1"] and ra["fp2"] == rp["fp2"]
+    got = {r["doc_id"]: r for r in
+           sketch_documents(docs, sp, lp, id_col="my_id",
+                            text_col="body").collect()}
+    assert set(got) == {d for d, _ in rows}
+    full = 0
+    for doc_id, text in rows:
+        data = (text or "").encode("utf-8")
+        sk = sketch_text_bytes(data, sp.k, sp.s, sp.seed)
+        r = got[doc_id]
+        assert bytes(r["sketch"]) == encode_signed(sk).tobytes(), doc_id
+        assert r["n_kmers"] == max(len(data) - sp.k + 1, 0), doc_id
+        card = kmv_set_size(sk) if len(sk) >= sp.s else len(sk)
+        assert r["card_est"] == card, doc_id
+        keys = compute_band_keys(sk, lp.bands, lp.prefix).view(np.int64)
+        assert list(r["band_key"]) == keys.tolist(), doc_id
+        assert (r["fp1"], r["fp2"]) == sketch_fp128(sk), doc_id
+        full += len(sk) == sp.s
+    assert full >= 1 and len(got[5]["sketch"]) == 8
 
 
 def _near_dup_docs(spark):
