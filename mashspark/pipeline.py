@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from . import cc as _cc
 from . import lsh as _lsh
 from . import verify as _verify
-from .params import PipelineConfig
+from .params import PipelineConfig, params_from_schema
 from .sketch import sketch_documents
 
 
@@ -158,8 +158,6 @@ def dedup_from_sketches(sketches: DataFrame,
     clustering without re-running the sketch UDF. Param compatibility
     (F6) is enforced against the table's embedded params when present."""
     config = config or PipelineConfig()
-    from .params import params_from_schema
-
     emb = params_from_schema(sketches)
     if emb is not None:
         config.sketch.check_compatible(emb)
@@ -273,25 +271,30 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
     near-dups ANY ``ref_docs`` row (the new-crawl-vs-existing-corpus
     stage; the batch analog of streaming.process_batch's history check).
 
-    Spark shape mirrors dedup_pipeline stage by stage, but candidates
-    come from a cross band join (new bands x ref bands on band_key) so
-    no within-corpus pairs are ever generated. Both corpora's ids are
-    remapped into disjoint spaces (new -> even, ref -> odd encoded ids
-    via a total bit-shift — safe over the full int64 hash-id range)
-    and the sketch tables unioned, which lets the existing two-tier
-    verify_pairs (prefix pre-filter, sketch table restricted to tier-1
-    survivor ids, attach joins) run untouched on the cross pairs;
-    original ids are recovered by skinny mapping joins on the way out.
+    Candidates come from a cross band join (new bands x ref bands on
+    band_key), so no within-corpus pair is ever generated, and
+    ``verify_pairs`` checks them against the two sketch tables in place
+    (``id_a`` from the slice, ``id_b`` from the reference). Pass
+    ``ref_sketches`` (e.g. from io.read_sketches) to read a committed
+    sketch table instead of re-sketching ``ref_docs``; param
+    compatibility is enforced (F6) before any comparison.
+
+    Cost model: per-run shuffle and materialization follow the slice,
+    not the reference. A committed reference table is read in place
+    (only the slice and a freshly sketched reference are checkpointed).
+    When the slice's band entries fit a broadcast (16 B each, one
+    ``collect_at_most`` probe), the reference's band entries are
+    semi-joined against the slice's keys map-side: only those sharing a
+    key with the slice reach an exchange. Otherwise both sides' bucket
+    sizes are shuffled.
 
     Skew discipline: a boilerplate band key with A new and B ref docs
     join-explodes to A*B candidates, so band keys whose candidate
     PRODUCT ``A*B`` exceeds ``config.lsh.hard_bucket_cap`` are dropped
     with per-side entry counts logged in ``metrics`` (same contract as
-    lsh.candidate_pairs: drops are visible, never silent).
-
-    Pass ``ref_sketches`` (e.g. from io.read_sketches) to skip
-    re-sketching a corpus that already has a committed sketch table;
-    param compatibility is enforced (F6) before any comparison.
+    lsh.candidate_pairs: drops are visible, never silent). A dropped
+    key has entries on both sides, so the semi-join reduction leaves
+    the hot set and ``metrics`` unchanged.
     """
     config = config or PipelineConfig()
     sp = config.sketch
@@ -299,51 +302,35 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
     _ids0 = _persistent_rdd_ids(spark)
     cap = int(config.lsh.hard_bucket_cap)
 
-    sk_new = sketch_documents(new_docs, sp, config.lsh,
-                              id_col=id_col, text_col=text_col)
+    # the slice's sketches feed the key probe, the band join and verify;
+    # eager for the multi-consumer checkpoint-race reason of dedup_pipeline.
+    # NOTE sketch_documents always emits the id as ``doc_id``.
+    sk_new = sketch_documents(new_docs, sp, config.lsh, id_col=id_col,
+                              text_col=text_col).localCheckpoint(eager=True)
     if ref_sketches is None:
-        sk_ref = sketch_documents(ref_docs, sp, config.lsh,
-                                  id_col=id_col, text_col=text_col)
+        sk_ref = sketch_documents(ref_docs, sp, config.lsh, id_col=id_col,
+                                  text_col=text_col).localCheckpoint(eager=True)
     else:
-        from .params import params_from_schema
-
         emb = params_from_schema(ref_sketches)
         if emb is not None:
             sp.check_compatible(emb)
         sk_ref = ref_sketches
-    # disjoint id spaces (new=even, ref=odd) so one sketch table serves
-    # verify_pairs without cross-side collisions. shiftleft|parity, not
-    # id*2(+1): doc ids are xxhash64 values spanning the full int64
-    # range, where id*2 throws ARITHMETIC_OVERFLOW under Spark 4's ANSI
-    # default for |id| >= 2^62. The bit-shift drops the top bit, so the
-    # ORIGINAL id rides along as ``_orig`` (8 B/row next to the 8 KB
-    # sketch) and is recovered by a skinny mapping join on the way out
-    # — never by arithmetic, whose float '/' decode was inexact past
-    # 2^53 anyway. (Two same-side ids differing only in bit 63 share an
-    # encoded id — the same birthday-collision class, and order, the
-    # 64-bit hash id scheme itself accepts.)
-    # NOTE sketch_documents always emits the id as ``doc_id`` whatever
-    # the caller's id_col — remap that, not id_col.
-    def _enc(side_bit: int):
-        return F.shiftleft(F.col("doc_id"), 1).bitwiseOR(F.lit(side_bit))
-
-    sk_new = (sk_new.withColumn("_orig", F.col("doc_id"))
-              .withColumn("doc_id", _enc(0)).localCheckpoint(eager=True))
-    sk_ref = (sk_ref.withColumn("_orig", F.col("doc_id"))
-              .withColumn("doc_id", _enc(1)).localCheckpoint(eager=True))
-    map_new = sk_new.select(F.col("doc_id").alias("id_a"),
-                            F.col("_orig").alias("_orig_new"))
-    map_ref = sk_ref.select(F.col("doc_id").alias("_eid_b"),
-                            F.col("_orig").alias("_orig_ref"))
-    sk_new = sk_new.drop("_orig")
-    sk_ref = sk_ref.drop("_orig")
 
     bn = _lsh.explode_bands(sk_new).select(
         "band_key", F.col("doc_id").alias("id_a"))
     br = _lsh.explode_bands(sk_ref).select(
         "band_key", F.col("doc_id").alias("id_b"))
-    # per-side bucket sizes (map-side partial agg); hot keys dropped
-    sz_n = bn.groupBy("band_key").agg(F.count("*").alias("n_new"))
+    keys = _verify.collect_at_most(
+        bn.select("band_key"), _verify._broadcast_threshold(spark) // 16)
+    if keys is not None:
+        # per-key slice counts on the driver; the reference keeps only
+        # the entries whose key the slice has, filtered map-side
+        sz_n = F.broadcast(spark.createDataFrame(
+            keys.groupby("band_key").size().reset_index(name="n_new"),
+            "band_key long, n_new long"))
+        br = br.join(sz_n.select("band_key"), "band_key", "left_semi")
+    else:
+        sz_n = bn.groupBy("band_key").agg(F.count("*").alias("n_new"))
     sz_r = br.groupBy("band_key").agg(F.count("*").alias("n_ref"))
     # cap the per-band candidate PRODUCT, not just each side: a band
     # with 10^5 new x 10^5 ref entries is far under a per-side cap yet
@@ -370,33 +357,25 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
         .distinct()
     )
 
-    sk_all = sk_new.unionByName(sk_ref)
     matched = _verify.verify_pairs(
-        cand, sk_all, sp,
+        cand, sk_new, sp,
         jaccard_threshold=config.jaccard_threshold,
         max_distance=config.max_distance,
         max_pvalue=config.max_pvalue,
         prefix_filter=config.lsh.prefix,
+        sketches_b=sk_ref,
     )
-    # best ref match per new doc: highest jaccard, lowest ORIGINAL ref
-    # id on ties (bitwise_not reverses order totally — no ANSI overflow
-    # at Long.MIN, unlike unary minus). The ref mapping join runs
-    # BEFORE the argmax: tie-breaking on the encoded id would diverge
-    # from the stated contract for real xxhash64 ids (shiftleft drops
-    # bit 63, so encoded order != original order past |id| >= 2^62).
-    # matched is the verified-pair set (small) and map_ref is 16 B/row,
-    # so the pre-agg join is cheap — and bitwise_not being self-inverse
-    # lets the original ref id ride the struct out, saving the post-agg
-    # join entirely.
+    # best ref match per new doc: highest jaccard, lowest ref id on ties
+    # (bitwise_not reverses order totally — no ANSI overflow at Long.MIN,
+    # unlike unary minus — and is self-inverse, so the id rides the
+    # struct out)
     best = (
-        matched.join(map_ref, matched["id_b"] == map_ref["_eid_b"])
-        .groupBy("id_a")
+        matched.groupBy("id_a")
         .agg(F.max(F.struct(
             F.col("jaccard").alias("j"),
-            F.bitwise_not(F.col("_orig_ref")).alias("nref"))).alias("_m"))
-        .join(map_new, "id_a")
+            F.bitwise_not(F.col("id_b")).alias("nref"))).alias("_m"))
         .select(
-            F.col("_orig_new").alias(id_col),
+            F.col("id_a").alias(id_col),
             F.col("_m.j").alias("jaccard"),
             F.bitwise_not(F.col("_m.nref")).alias("dup_of"),
         )

@@ -175,16 +175,25 @@ def _sketch_side_small(sk: DataFrame) -> bool:
     return 0 < thr and 0 <= est < thr
 
 
-def _survivor_sketches(sk: DataFrame, cands: DataFrame) -> DataFrame:
-    """Restrict the fat sketch table to the ids of the surviving pairs
+def collect_at_most(df: DataFrame, cap: int):
+    """``df``'s rows as a pandas frame if there are at most ``cap`` > 0,
+    else None: one collect of at most ``cap + 1`` rows (the limit(n+1)
+    probe of ``cc.connected_components``), so an exact size, not an
+    estimate, picks the plan."""
+    if cap <= 0:
+        return None
+    head = df.limit(cap + 1).toPandas()
+    return head if len(head) <= cap else None
+
+
+def _survivor_sketches(cands: DataFrame, *tables: DataFrame) -> list[DataFrame]:
+    """Restrict each fat sketch table to the ids of the surviving pairs
     ``cands`` BEFORE the attach joins, so they only move survivors'
     sketches instead of the whole table.
 
-    The plan is chosen from the exact size of the survivor-id set, not
-    from an estimate: a single collect fetches at most ``cap + 1``
-    distinct ids (the limit(n+1) probe of ``cc.connected_components``),
-    with ``cap`` the broadcast threshold over 8 B per id. When they fit,
-    the sketch table is semi-joined against a broadcast of them —
+    One ``collect_at_most`` of the distinct survivor ids (``cap`` = the
+    broadcast threshold over 8 B per id) serves every table. When they
+    fit, each table is semi-joined against a broadcast of them —
     filtered map-side, never exchanged. Otherwise (the web-scale case,
     or broadcasting disabled) the semi-join shuffles both sides, with a
     SHUFFLE_HASH hint building on the skinny id set: without it the
@@ -196,14 +205,13 @@ def _survivor_sketches(sk: DataFrame, cands: DataFrame) -> DataFrame:
         .unionByName(cands.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    spark = sk.sparkSession
-    cap = _broadcast_threshold(spark) // 8
-    if cap > 0:
-        head = surv_ids.limit(cap + 1).toPandas()
-        if len(head) <= cap:
-            ids = spark.createDataFrame(head, surv_ids.schema)
-            return sk.join(F.broadcast(ids), "doc_id", "left_semi")
-    return sk.join(surv_ids.hint("shuffle_hash"), "doc_id", "left_semi")
+    spark = cands.sparkSession
+    head = collect_at_most(surv_ids, _broadcast_threshold(spark) // 8)
+    if head is not None:
+        ids = F.broadcast(spark.createDataFrame(head, surv_ids.schema))
+    else:
+        ids = surv_ids.hint("shuffle_hash")
+    return [t.join(ids, "doc_id", "left_semi") for t in tables]
 
 
 def _attach(cands: DataFrame, sk: DataFrame, id_col: str, suffix: str,
@@ -246,9 +254,15 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
                  with_pvalue: bool = False,
                  prefix_filter: int | None = 128,
                  prefix_margin: float = 0.15,
-                 materialize_tier1: bool = True) -> DataFrame:
+                 materialize_tier1: bool = True,
+                 sketches_b: DataFrame | None = None) -> DataFrame:
     """Attach Mash-exact (common, denom, jaccard, mash_dist[, p_value]) to a
     candidate-pair DataFrame (id_a, id_b), id_a < id_b.
+
+    ``id_a`` takes its sketch from ``sketches`` and ``id_b`` from
+    ``sketches_b`` (default: ``sketches``), so cross pairs between two
+    corpora (a new slice vs a committed reference, whose id spaces may
+    overlap) verify against both tables in place: no id remap, no union.
 
     Two-tier verification when ``jaccard_threshold`` and ``prefix_filter``
     are set: tier 1 joins only the bottom-``prefix_filter`` prefix of each
@@ -261,24 +275,29 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
     shuffle cost, true pairs are untouched, and the FINAL numbers are
     always the full-s exact ones (precision is never affected).
 
-    Between the tiers the sketch table is restricted to the survivors'
+    Between the tiers the sketch tables are restricted to the survivors'
     ids (``_survivor_sketches``), so tier 2 attaches only their sketches.
 
     Join strategy: shuffled-hash joins (no fat-row sorts); the cheap
     jaccard threshold runs before the p-value UDF (cheap-filter-first,
     CommandDistance.cpp:409-417).
     """
-    embedded = params_from_schema(sketches)
-    if embedded is not None:  # refuse mismatched tables (F6, Sketch.cpp:133-160)
-        params.check_compatible(embedded)
-    sk = sketches.select("doc_id", "sketch", "card_est")
-    small = _sketch_side_small(sk)
-    if small:
+    two = sketches_b is not None
+    for t in (sketches, sketches_b) if two else (sketches,):
+        embedded = params_from_schema(t)
+        if embedded is not None:  # refuse mismatched tables (F6, Sketch.cpp:133-160)
+            params.check_compatible(embedded)
+    sk_a = sk_b = sketches.select("doc_id", "sketch", "card_est")
+    small_a = small_b = _sketch_side_small(sk_a)
+    if two:
+        sk_b = sketches_b.select("doc_id", "sketch", "card_est")
+        small_b = _sketch_side_small(sk_b)
+    if small_a and small_b:
         # broadcast-attach path: the pair relation often arrives with
         # the partitioning of a tiny crossJoin side — spread it so the
         # merge UDF runs at full slot width (explicit N: AQE does not
         # re-coalesce a user-numbered repartition)
-        cands = cands.repartition(int(sk.sparkSession.conf.get(
+        cands = cands.repartition(int(sk_a.sparkSession.conf.get(
             "spark.sql.shuffle.partitions")))
     use_prefix = (
         prefix_filter is not None
@@ -295,8 +314,8 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
         prefix_margin = max(float(prefix_margin), 6.0 * sigma)
         pre = F.substring(F.col("sketch"), 1, int(prefix_filter) * 8)
         pvu = make_verify_udf(int(prefix_filter))
-        tier1 = _attach(cands, sk, "id_a", "a", pre, small=small)
-        tier1 = _attach(tier1, sk, "id_b", "b", pre, small=small)
+        tier1 = _attach(cands, sk_a, "id_a", "a", pre, small=small_a)
+        tier1 = _attach(tier1, sk_b, "id_b", "b", pre, small=small_b)
         tier1 = tier1.withColumn(
             "_p", pvu(F.col("sketch_a"), F.col("sketch_b"))
         ).select(
@@ -326,10 +345,10 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
             # checkpoint makes their tasks race on the checkpoint lock
             # (see lsh.candidate_pairs).
             cands = cands.localCheckpoint(eager=True)
-        sk = _survivor_sketches(sk, cands)
+        sk_a, sk_b = _survivor_sketches(cands, sk_a, sk_b)
 
-    df = _attach(cands, sk, "id_a", "a", F.col("sketch"), small=small)
-    df = _attach(df, sk, "id_b", "b", F.col("sketch"), small=small)
+    df = _attach(cands, sk_a, "id_a", "a", F.col("sketch"), small=small_a)
+    df = _attach(df, sk_b, "id_b", "b", F.col("sketch"), small=small_b)
     return _merge_and_score(df, params, jaccard_threshold=jaccard_threshold,
                             max_distance=max_distance, max_pvalue=max_pvalue,
                             with_pvalue=with_pvalue)

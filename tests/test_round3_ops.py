@@ -1323,3 +1323,87 @@ def test_dedup_against_tie_breaks_on_original_ref_id_full_range(spark):
     assert len(got) == 1 and got[0].is_dup
     assert got[0].dup_of == 5, (
         f"tie must break on original ref id (5), got {got[0].dup_of}")
+
+
+def _random_text(seed: int, n_words: int = 120) -> str:
+    rng = np.random.default_rng(seed)
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
+    return " ".join("".join(rng.choice(letters, size=rng.integers(3, 9)))
+                    for _ in range(n_words))
+
+
+def test_dedup_against_ids_differing_in_bit_63(spark):
+    """Ids of one corpus that differ only in bit 63 are distinct docs:
+    each new copy resolves to its own source, not to the other one."""
+    from mashspark.params import LSHParams, PipelineConfig, SketchParams
+    from mashspark.pipeline import dedup_against
+
+    cfg = PipelineConfig(
+        sketch=SketchParams(k=21, s=256, seed=42),
+        lsh=LSHParams(bands=32, prefix=64),
+        jaccard_threshold=0.7,
+    )
+    text_a, text_b = _random_text(1), _random_text(2)
+    far = 5 - (1 << 63)
+    ref = spark.createDataFrame([(5, text_a), (far, text_b)],
+                                "doc_id long, text string")
+    new = spark.createDataFrame([(1, text_a), (2, text_b)],
+                                "doc_id long, text string")
+    res = dedup_against(new, ref, cfg)
+    got = {r.doc_id: (r.is_dup, r.dup_of) for r in res.decisions.collect()}
+    res.release()
+    assert got == {1: (True, 5), 2: (True, far)}
+
+
+def test_dedup_against_band_reduction_paths_match(spark, monkeypatch):
+    """The reference's band entries are filtered to the slice's keys
+    against a broadcast of them (default threshold) or the bucket sizes
+    of both sides are shuffled (broadcasting disabled). With a bucket cap
+    small enough to drop bands, both give identical decisions and an
+    identical metrics row."""
+    from mashspark import verify as V
+    from mashspark.params import LSHParams, PipelineConfig, SketchParams
+    from mashspark.pipeline import dedup_against
+    from mashspark.webtext import webtext_spark_df
+
+    cfg = PipelineConfig(
+        sketch=SketchParams(k=21, s=256, seed=42),
+        lsh=LSHParams(bands=32, prefix=64, hard_bucket_cap=2),
+        jaccard_threshold=0.7,
+    )
+    ref = webtext_spark_df(spark, n_base=30, seed=1).select("doc_id", "text")
+    new = (ref.filter(F.col("doc_id") % 3 == 0)
+           .select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+           .unionByName(webtext_spark_df(spark, n_base=5, seed=99)
+                        .select("doc_id", "text")))
+    key_probes = []
+    probe = V.collect_at_most
+
+    def spy(df, cap):
+        out = probe(df, cap)
+        if df.columns == ["band_key"]:
+            key_probes.append(out is not None)
+        return out
+
+    monkeypatch.setattr(V, "collect_at_most", spy)
+
+    def run():
+        res = dedup_against(new, ref, cfg)
+        dec = sorted(tuple(r) for r in res.decisions.collect())
+        m = res.metrics.collect()[0]
+        res.release()
+        return dec, m
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    got, m_got = run()
+    spark.conf.set(key, "-1")
+    try:
+        ref_dec, m_ref = run()
+    finally:
+        spark.conf.set(key, prev)
+    assert key_probes == [True, False]
+    assert m_got.n_dropped_buckets > 0
+    assert m_got == m_ref
+    assert got == ref_dec
+    assert any(d[1] for d in got)
