@@ -223,8 +223,7 @@ def cmd_contain(spark: SparkSession, args) -> int:
     qry = load_or_sketch(spark, args.query, params, lsh)
     cands = (ref.select(F.col("doc_id").alias("id_a"))
              .crossJoin(qry.select(F.col("doc_id").alias("id_b"))))
-    both = ref.unionByName(qry, allowMissingColumns=True).dropDuplicates(["doc_id"])
-    out = contain_pairs(cands, both, params)
+    out = contain_pairs(cands, ref, params, sketches_b=qry)
     _emit(out, args.output)
     return 0
 

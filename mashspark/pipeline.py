@@ -53,19 +53,23 @@ class DedupResult:
     def release(self) -> None:
         """Free every block this pipeline materialized: the
         localCheckpointed sketch, exact-group, tier-1 survivor and pair
-        blocks (unpinned via the JVM persistent-RDD registry, the only
-        handle Spark exposes for checkpointed blocks)."""
-        jsc = self.sketches.sparkSession.sparkContext._jsc
-        jmap = jsc.getPersistentRDDs()
-        for rid in self.ckpt_rdd_ids or []:
-            rdd = jmap.get(rid)
-            if rdd is not None:
-                rdd.unpersist()
+        blocks."""
+        _release_rdds(self.sketches.sparkSession, self.ckpt_rdd_ids)
 
 
 def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k) for k in jmap.keySet().toArray()}
+
+
+def _release_rdds(spark: SparkSession, rdd_ids) -> None:
+    """Unpin the given RDDs' blocks via the JVM persistent-RDD registry,
+    the only handle Spark exposes for checkpointed blocks."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in rdd_ids or []:
+        rdd = jmap.get(rid)
+        if rdd is not None:
+            rdd.unpersist()
 
 
 def exact_collapse(sketches: DataFrame) -> DataFrame:
@@ -255,12 +259,7 @@ class CrossDedupResult:
     ckpt_rdd_ids: list = None
 
     def release(self) -> None:
-        jsc = self.decisions.sparkSession.sparkContext._jsc
-        jmap = jsc.getPersistentRDDs()
-        for rid in self.ckpt_rdd_ids or []:
-            rdd = jmap.get(rid)
-            if rdd is not None:
-                rdd.unpersist()
+        _release_rdds(self.decisions.sparkSession, self.ckpt_rdd_ids)
 
 
 def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,

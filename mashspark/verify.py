@@ -12,6 +12,8 @@ expensive binomial p-value is only computed for pairs that survive
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -95,25 +97,20 @@ def make_contain_udf():
 
 
 def contain_pairs(cands: DataFrame, sketches: DataFrame,
-                  params: SketchParams) -> DataFrame:
+                  params: SketchParams,
+                  sketches_b: DataFrame | None = None) -> DataFrame:
     """Containment mode (J6): for each candidate pair, the containment
     score of the id_b sketch (query) in the id_a sketch (ref) — the
     "page contains boilerplate template" op. Columns:
     (id_a, id_b, common, used, containment, error) with
     containment = common/used (0 when used = 0) and error = 1/sqrt(used)
-    (``CommandContain.cpp:258-262``). Join strategy mirrors
-    ``verify_pairs``: skinny pair table joins the fat sketch table once
-    per side."""
-    embedded = params_from_schema(sketches)
-    if embedded is not None:
-        params.check_compatible(embedded)
-    sk = sketches.select("doc_id", "sketch", F.lit(0).alias("card_est"))
-    small = _sketch_side_small(sk)
-    if small:
-        cands = cands.repartition(int(sk.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions")))
-    df = _attach(cands, sk, "id_a", "a", F.col("sketch"), small=small)
-    df = _attach(df, sk, "id_b", "b", F.col("sketch"), small=small)
+    (``CommandContain.cpp:258-262``).
+
+    ``id_a`` takes its sketch from ``sketches`` and ``id_b`` from
+    ``sketches_b`` (default: ``sketches``) through the same two-table
+    attach as ``verify_pairs``, so a reference and a query table whose
+    ids overlap are compared in place, never unioned."""
+    df = _attach_sketches(cands, sketches, sketches_b, params)
     cu = make_contain_udf()
     df = df.withColumn("_c", cu(F.col("sketch_a"), F.col("sketch_b")))
     return df.select(
@@ -161,11 +158,12 @@ def _broadcast_threshold(spark) -> int:
 
 def _sketch_side_small(sk: DataFrame) -> bool:
     """True when the optimizer's size estimate for the sketch relation
-    is confidently under the broadcast threshold. Checkpointed RDD scans
-    have no stats (estimate = defaultSizeInBytes, effectively infinite),
-    so the big-pipeline path always returns False; parquet-backed or
-    freshly-derived small tables (a 20-ref screen db, a few-hundred-doc
-    ground-truth subset) return True."""
+    is under the broadcast threshold. The estimate is not the table's
+    bytes: a parquet scan estimates from its compressed file sizes, and
+    on Spark 4.1.2 a ``localCheckpoint`` keeps its origin plan's
+    estimate, which follows the input text, not the 8·s-byte sketch rows
+    (crawl-dense's checkpointed sketch table: 279 KB estimated for
+    18.65 MB), so tables far above the threshold can qualify."""
     try:
         est = int(sk._jdf.queryExecution().optimizedPlan().stats()
                   .sizeInBytes())  # py4j converts the scala BigInt to int
@@ -222,7 +220,7 @@ def _attach(cands: DataFrame, sk: DataFrame, id_col: str, suffix: str,
         F.col("card_est").alias(f"card_{suffix}"),
     )
     if small:
-        # provably-small sketch side (see _sketch_side_small): broadcast
+        # sketch side estimated small (see _sketch_side_small): broadcast
         # it so the fat ATTACHED intermediate is never exchanged — the
         # two sequential shuffle-hash attaches otherwise move
         # |pairs| x 8 KB rows through the id_b exchange (measured on the
@@ -242,54 +240,37 @@ def _attach(cands: DataFrame, sk: DataFrame, id_col: str, suffix: str,
     # serially built 2x ~300 MB broadcasts). The shuffled-hash join lands
     # both sides on the configured shuffle width, the UDF runs at full
     # slot parallelism, and no fat-row sort or driver broadcast happens.
-    # At web scale the sketch side is never broadcastable, so this stays
-    # the production path.
+    # This path runs whenever a side's size estimate reaches the
+    # broadcast threshold; the estimate can undershoot the sketch bytes
+    # by far (see _sketch_side_small).
     return cands.hint("shuffle_hash").join(side, id_col)
 
 
-def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
-                 jaccard_threshold: float | None = None,
-                 max_distance: float | None = None,
-                 max_pvalue: float | None = None,
-                 with_pvalue: bool = False,
-                 prefix_filter: int | None = 128,
-                 prefix_margin: float = 0.15,
-                 materialize_tier1: bool = True,
-                 sketches_b: DataFrame | None = None) -> DataFrame:
-    """Attach Mash-exact (common, denom, jaccard, mash_dist[, p_value]) to a
-    candidate-pair DataFrame (id_a, id_b), id_a < id_b.
+def _attach_sketches(cands: DataFrame, sketches: DataFrame,
+                     sketches_b: DataFrame | None, params: SketchParams,
+                     prefix: tuple[int, float] | None = None,
+                     materialize_tier1: bool = True) -> DataFrame:
+    """(id_a, id_b) pairs -> (id_a, id_b, sketch_a, card_a, sketch_b,
+    card_b), the one attach behind ``verify_pairs``, ``contain_pairs``
+    and ``cross_dist``. ``id_a`` takes its sketch from ``sketches`` and
+    ``id_b`` from ``sketches_b`` (default: ``sketches``), so two corpora
+    whose id spaces overlap are compared in place: no id remap, no union.
+    Both tables must match ``params`` (F6, Sketch.cpp:133-160).
 
-    ``id_a`` takes its sketch from ``sketches`` and ``id_b`` from
-    ``sketches_b`` (default: ``sketches``), so cross pairs between two
-    corpora (a new slice vs a committed reference, whose id spaces may
-    overlap) verify against both tables in place: no id remap, no union.
-
-    Two-tier verification when ``jaccard_threshold`` and ``prefix_filter``
-    are set: tier 1 joins only the bottom-``prefix_filter`` prefix of each
-    sketch (``substring`` of the binary blob — 1 KB instead of 8 KB per
-    side) and drops pairs whose prefix-Jaccard estimate is below
-    ``threshold - prefix_margin``; tier 2 runs the full-s Mash-exact merge
-    on the survivors. The prefix estimate over m hashes has sd
-    ~ sqrt(j(1-j)/m) (~0.04 at m=128, j=0.7), so a 0.15 margin is >3.5 sd
-    — boilerplate-only candidate junk (j ~ 0.0-0.3) dies at 1/8 of the
-    shuffle cost, true pairs are untouched, and the FINAL numbers are
-    always the full-s exact ones (precision is never affected).
-
-    Between the tiers the sketch tables are restricted to the survivors'
-    ids (``_survivor_sketches``), so tier 2 attaches only their sketches.
-
-    Join strategy: shuffled-hash joins (no fat-row sorts); the cheap
-    jaccard threshold runs before the p-value UDF (cheap-filter-first,
-    CommandDistance.cpp:409-417).
+    ``prefix=(m, floor)`` is verify's tier 1: attach only the bottom-m
+    prefix of each sketch, keep the pairs whose prefix Jaccard is >=
+    ``floor``, restrict both tables to those survivors' ids
+    (``_survivor_sketches``), then attach full sketches to them.
     """
-    two = sketches_b is not None
-    for t in (sketches, sketches_b) if two else (sketches,):
+    if sketches_b is None:
+        sketches_b = sketches
+    for t in (sketches, sketches_b):
         embedded = params_from_schema(t)
         if embedded is not None:  # refuse mismatched tables (F6, Sketch.cpp:133-160)
             params.check_compatible(embedded)
     sk_a = sk_b = sketches.select("doc_id", "sketch", "card_est")
     small_a = small_b = _sketch_side_small(sk_a)
-    if two:
+    if sketches_b is not sketches:
         sk_b = sketches_b.select("doc_id", "sketch", "card_est")
         small_b = _sketch_side_small(sk_b)
     if small_a and small_b:
@@ -299,32 +280,22 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
         # re-coalesce a user-numbered repartition)
         cands = cands.repartition(int(sk_a.sparkSession.conf.get(
             "spark.sql.shuffle.partitions")))
-    use_prefix = (
-        prefix_filter is not None
-        and jaccard_threshold is not None
-        and prefix_filter < params.s
-    )
-    if use_prefix:
-        # widen the margin to >=6 sd of the m-hash estimator so borderline
-        # true pairs are essentially never pre-filtered (P < 1e-9/pair)
-        import math
 
-        t = float(jaccard_threshold)
-        sigma = math.sqrt(max(t * (1.0 - t), 0.05) / float(prefix_filter))
-        prefix_margin = max(float(prefix_margin), 6.0 * sigma)
-        pre = F.substring(F.col("sketch"), 1, int(prefix_filter) * 8)
-        pvu = make_verify_udf(int(prefix_filter))
-        tier1 = _attach(cands, sk_a, "id_a", "a", pre, small=small_a)
-        tier1 = _attach(tier1, sk_b, "id_b", "b", pre, small=small_b)
-        tier1 = tier1.withColumn(
+    def attach(pairs: DataFrame, a: DataFrame, b: DataFrame, payload) -> DataFrame:
+        pairs = _attach(pairs, a, "id_a", "a", payload, small=small_a)
+        return _attach(pairs, b, "id_b", "b", payload, small=small_b)
+
+    if prefix is not None:
+        m, floor = prefix
+        pvu = make_verify_udf(m)
+        pre = F.substring(F.col("sketch"), 1, m * 8)
+        tier1 = attach(cands, sk_a, sk_b, pre).withColumn(
             "_p", pvu(F.col("sketch_a"), F.col("sketch_b"))
         ).select(
             "id_a", "id_b",
             (F.col("_p.common") / F.greatest(F.col("_p.denom"), F.lit(1))).alias("_jpre"),
         )
-        cands = tier1.filter(
-            F.col("_jpre") >= float(jaccard_threshold) - float(prefix_margin)
-        ).select("id_a", "id_b")
+        cands = tier1.filter(F.col("_jpre") >= floor).select("id_a", "id_b")
         if materialize_tier1:
             # materialize the survivor list ONCE (16 B rows): it is
             # consumed by the tier-2 attach chain AND by the survivor-id
@@ -346,23 +317,53 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
             # (see lsh.candidate_pairs).
             cands = cands.localCheckpoint(eager=True)
         sk_a, sk_b = _survivor_sketches(cands, sk_a, sk_b)
-
-    df = _attach(cands, sk_a, "id_a", "a", F.col("sketch"), small=small_a)
-    df = _attach(df, sk_b, "id_b", "b", F.col("sketch"), small=small_b)
-    return _merge_and_score(df, params, jaccard_threshold=jaccard_threshold,
-                            max_distance=max_distance, max_pvalue=max_pvalue,
-                            with_pvalue=with_pvalue)
+    return attach(cands, sk_a, sk_b, F.col("sketch"))
 
 
-def _merge_and_score(df: DataFrame, params: SketchParams,
-                     jaccard_threshold: float | None = None,
-                     max_distance: float | None = None,
-                     max_pvalue: float | None = None,
-                     with_pvalue: bool = False) -> DataFrame:
-    """(id_a, id_b, sketch_a, sketch_b, card_a, card_b) -> scored pairs:
-    the Mash-exact capped merge plus distance/p-value column expressions
-    and the reference's -d/-v filters (shared tail of ``verify_pairs``
-    and ``cross_dist``)."""
+# floor of verify_pairs' tier-1 margin below the Jaccard threshold
+_PREFIX_MARGIN = 0.15
+
+
+def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
+                 jaccard_threshold: float | None = None,
+                 max_distance: float | None = None,
+                 max_pvalue: float | None = None,
+                 with_pvalue: bool = False,
+                 prefix_filter: int | None = 128,
+                 materialize_tier1: bool = True,
+                 sketches_b: DataFrame | None = None) -> DataFrame:
+    """Attach Mash-exact (common, denom, jaccard, mash_dist[, p_value]) to a
+    candidate-pair DataFrame (id_a, id_b).
+
+    ``id_a`` takes its sketch from ``sketches`` and ``id_b`` from
+    ``sketches_b`` (default: ``sketches``) through ``_attach_sketches``,
+    so cross pairs between two corpora (a new slice vs a committed
+    reference, whose id spaces may overlap) verify against both tables
+    in place.
+
+    Two-tier verification when ``jaccard_threshold`` and ``prefix_filter``
+    are set: tier 1 joins only the bottom-``prefix_filter`` prefix of each
+    sketch (1 KB instead of 8 KB per side at m=128) and drops pairs whose
+    prefix-Jaccard estimate is below ``threshold - margin``; tier 2 runs
+    the full-s Mash-exact merge on the survivors. The prefix estimate
+    over m hashes has sd ~ sqrt(j(1-j)/m), and the margin is
+    max(0.15, 6 sd): 6 sd = 0.243 at the default t=0.7, m=128, so
+    borderline true pairs are essentially never pre-filtered
+    (P < 1e-9/pair) while boilerplate-only candidate junk (j ~ 0.0-0.3)
+    dies at 1/8 of the shuffle cost. The FINAL numbers are always the
+    full-s exact ones (precision is never affected).
+
+    The cheap jaccard threshold runs before the p-value UDF
+    (cheap-filter-first, CommandDistance.cpp:409-417).
+    """
+    prefix = None
+    if (prefix_filter is not None and jaccard_threshold is not None
+            and prefix_filter < params.s):
+        t = float(jaccard_threshold)
+        sigma = math.sqrt(max(t * (1.0 - t), 0.05) / float(prefix_filter))
+        prefix = (int(prefix_filter), t - max(_PREFIX_MARGIN, 6.0 * sigma))
+    df = _attach_sketches(cands, sketches, sketches_b, params, prefix=prefix,
+                          materialize_tier1=materialize_tier1)
     vu = make_verify_udf(params.s)
     df = df.withColumn("_v", vu(F.col("sketch_a"), F.col("sketch_b")))
     df = df.select(
@@ -416,34 +417,22 @@ def cross_dist(ref_sketches: DataFrame, query_sketches: DataFrame,
     skinny rows — fine distributed); at web scale the near-duplicate
     path is ``lsh.candidate_pairs`` + ``verify_pairs``, which never
     enumerates non-colliding pairs. The pair relation here is two 8-byte
-    ids; sketches attach via the same skinny-pair shuffled-hash joins as
-    ``verify_pairs``, so no fat row ever enters the cross product.
+    ids; ``verify_pairs`` then attaches ``id_a``'s sketch from
+    ``ref_sketches`` and ``id_b``'s from ``query_sketches`` and scores
+    every pair, so no fat row ever enters the cross product.
 
     ``upper_only=True`` keeps id_a < id_b (triangle). Param compat is
     enforced against both tables' embedded params (Sketch.cpp:133-160).
     """
-    for t in (ref_sketches, query_sketches):
-        embedded = params_from_schema(t)
-        if embedded is not None:
-            params.check_compatible(embedded)
     cands = (
         ref_sketches.select(F.col("doc_id").alias("id_a"))
         .crossJoin(query_sketches.select(F.col("doc_id").alias("id_b")))
     )
     if upper_only:
         cands = cands.filter(F.col("id_a") < F.col("id_b"))
-    ra = ref_sketches.select("doc_id", "sketch", "card_est")
-    qb = query_sketches.select("doc_id", "sketch", "card_est")
-    small_a, small_b = _sketch_side_small(ra), _sketch_side_small(qb)
-    if small_a and small_b:
-        # both sides broadcast: spread the crossJoin output so the merge
-        # UDF is not bound to the left side's (tiny) partitioning
-        cands = cands.repartition(int(ra.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions")))
-    df = _attach(cands, ra, "id_a", "a", F.col("sketch"), small=small_a)
-    df = _attach(df, qb, "id_b", "b", F.col("sketch"), small=small_b)
-    return _merge_and_score(df, params, max_distance=max_distance,
-                            max_pvalue=max_pvalue, with_pvalue=with_pvalue)
+    return verify_pairs(cands, ref_sketches, params, max_distance=max_distance,
+                        max_pvalue=max_pvalue, with_pvalue=with_pvalue,
+                        sketches_b=query_sketches)
 
 
 def best_k_hits(pairs: DataFrame, b: int, query_col: str = "id_b",

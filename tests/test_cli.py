@@ -8,8 +8,9 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
-from mashspark import cli
+from mashspark import cli, compare
 from mashspark.compare import capped_merge_sorted, mash_distance
 from mashspark.hashing import decode_sketch_bytes
 from mashspark.params import LSHParams, SketchParams
@@ -56,6 +57,27 @@ def test_cross_dist_matches_numpy(spark, docs_parquet):
     # doc i and i+6 share a seed => identical text => distance 0
     ident = out[(out.id_a + 6) == out.id_b]
     assert (ident.mash_dist == 0.0).all() and len(ident) == 6
+
+    # two tables whose ids overlap: even docs vs odd docs, each renumbered
+    # from 0 (disjoint families), so id_a must read the first table and
+    # id_b the second
+    def half(parity):
+        d = docs.filter(F.col("doc_id") % 2 == parity)
+        return sketch_documents(d.withColumn("doc_id", F.expr("doc_id div 2")),
+                                PARAMS, LSHParams())
+
+    ref, qry = half(0), half(1)
+    out = cross_dist(ref, qry, PARAMS).toPandas()
+    assert len(out) == 6 * 6
+    blobs = [{r["doc_id"]: r["sketch"] for r in t.select("doc_id", "sketch").collect()}
+             for t in (ref, qry)]
+    for _, row in out.iterrows():
+        a = np.sort(decode_sketch_bytes(bytes(blobs[0][row["id_a"]])))
+        b = np.sort(decode_sketch_bytes(bytes(blobs[1][row["id_b"]])))
+        common, denom = capped_merge_sorted(a, b, PARAMS.s)
+        assert row["common"] == common and row["denom"] == denom
+    # ref docs i and i+3 are identical, but no ref doc equals a query doc
+    assert (out.mash_dist > 0.0).all()
 
 
 def test_cli_sketch_info_paste(spark, docs_parquet, tmp_path, capsys):
@@ -161,6 +183,36 @@ def test_cli_screen_contain_bounds_dedup(spark, docs_parquet, tmp_path, capsys):
     m = json.loads(spark.read.json(os.path.join(dd, "metrics.json"))
                    .collect()[0]["metrics"])
     assert m["n_docs"] == 12 and m["n_clusters"] == 6
+
+
+def test_cli_contain_tables_with_overlapping_ids(spark, tmp_path, capsys):
+    """`contain` compares the reference and query tables in place: two
+    tables that number their docs from the same ids keep their own
+    sketches (a union of the two kept one arbitrary sketch per id)."""
+    def words(tag, n):
+        return " ".join(f"{tag}{j}" for j in range(n))
+
+    ref_path = _mkdocs(spark, str(tmp_path / "ref.parquet"),
+                       [(0, words("alpha", 60)), (1, words("beta", 60))])
+    qry_path = _mkdocs(spark, str(tmp_path / "qry.parquet"),
+                       [(0, words("alpha", 60) + " " + words("extra", 40)),
+                        (1, words("delta", 60))])
+    capsys.readouterr()
+    assert cli.main(["contain", *FLAGS, ref_path, qry_path]) == 0
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert len(lines) == 4
+
+    def own(path):
+        sk = sketch_documents(spark.read.parquet(path), PARAMS, LSHParams())
+        return {r["doc_id"]: np.sort(decode_sketch_bytes(bytes(r["sketch"])))
+                for r in sk.select("doc_id", "sketch").collect()}
+
+    ref, qry = own(ref_path), own(qry_path)
+    for ln in lines:
+        id_a, id_b, common, used, containment, _err = ln.split("\t")
+        want = compare.contain_sketches(ref[int(id_a)], qry[int(id_b)])
+        assert (int(common), int(used)) == want, ln
+        assert float(containment) == (want[0] / want[1] if want[1] else 0.0)
 
 
 def test_cli_stream_incremental(spark, docs_parquet, tmp_path, capsys):

@@ -210,10 +210,11 @@ def _all_pairs(sk):
 
 def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path):
     """Round-6: verify_pairs broadcasts the sketch side when its size
-    ESTIMATE is provably small (parquet-backed tables carry real stats;
-    checkpointed scans never qualify). Pin output equality between the
-    two attach strategies on a parquet-backed table, and that the small
-    path actually fires there."""
+    ESTIMATE is under the broadcast threshold (parquet scans estimate
+    from file sizes; a localCheckpoint keeps its origin plan's estimate,
+    which can be far below its sketch bytes). Pin output equality
+    between the two attach strategies on a parquet-backed table, and
+    that the small path actually fires there."""
     from mashspark.sketch import sketch_documents
     from mashspark import verify as V
 
