@@ -29,6 +29,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import verify as _verify
+
 
 def explode_bands(sketches: DataFrame) -> DataFrame:
     """(doc_id, band_key[]) -> (doc_id, band_key). The residue class is
@@ -225,6 +227,63 @@ def candidate_pairs(sketches: DataFrame, band_doc_cap: int = 1000,
     pairs = (
         cold_pairs.select("id_a", "id_b")
         .unionByName(hot_pairs.select("id_a", "id_b"))
+        .distinct()
+    )
+    return pairs, metrics
+
+
+def cross_candidate_pairs(bands_a: DataFrame, bands_b: DataFrame,
+                          hard_bucket_cap: int):
+    """Distinct cross candidate pairs (id_a, id_b) of two band relations
+    ``(band_key, id_a)`` x ``(band_key, id_b)`` plus one metrics row
+    (n_dropped_buckets, n_dropped_new_entries, n_dropped_ref_entries):
+    the band join of ``pipeline.dedup_against`` and of the streaming
+    deduper's history check, so no within-side pair is ever generated.
+
+    When side a's entries fit a broadcast (16 B each, one
+    ``collect_at_most`` probe), side b is semi-joined against its keys
+    map-side; otherwise both sides' bucket sizes are shuffled. Band keys
+    whose candidate PRODUCT ``A*B`` exceeds ``hard_bucket_cap`` are
+    dropped and counted (drops are visible, never silent); a dropped key
+    has entries on both sides, so the semi-join leaves the dropped set
+    and the metrics unchanged.
+    """
+    spark = bands_a.sparkSession
+    keys = _verify.collect_at_most(
+        bands_a.select("band_key"), _verify._broadcast_threshold(spark) // 16)
+    if keys is not None:
+        # per-key side-a counts from the collected keys; side b keeps
+        # only the entries whose key side a has, filtered map-side
+        sz_n = F.broadcast(spark.createDataFrame(
+            keys.groupby("band_key").size().reset_index(name="n_new"),
+            "band_key long, n_new long"))
+        bands_b = bands_b.join(sz_n.select("band_key"), "band_key", "left_semi")
+    else:
+        sz_n = bands_a.groupBy("band_key").agg(F.count("*").alias("n_new"))
+    sz_r = bands_b.groupBy("band_key").agg(F.count("*").alias("n_ref"))
+    # cap the per-band candidate PRODUCT, not just each side: a band
+    # with 10^5 new x 10^5 ref entries is far under a per-side cap yet
+    # join-explodes to 10^10 rows. n_new*n_ref <= hard_bucket_cap
+    # bounds every band's candidate volume directly (and subsumes the
+    # per-side check, since the inner size-join keeps only bands
+    # present on both sides). Compared in double: the long product
+    # itself could overflow ANSI arithmetic at web-scale counts.
+    hot = (
+        sz_n.join(sz_r, "band_key")
+        .filter(F.col("n_new").cast("double") * F.col("n_ref")
+                > int(hard_bucket_cap))
+        .localCheckpoint(eager=True)
+    )
+    metrics = hot.agg(
+        F.count("*").alias("n_dropped_buckets"),
+        F.coalesce(F.sum("n_new"), F.lit(0)).alias("n_dropped_new_entries"),
+        F.coalesce(F.sum("n_ref"), F.lit(0)).alias("n_dropped_ref_entries"),
+    )
+    bands_a = bands_a.join(hot.select("band_key"), "band_key", "left_anti")
+    bands_b = bands_b.join(hot.select("band_key"), "band_key", "left_anti")
+    pairs = (
+        bands_a.join(bands_b, "band_key")
+        .select("id_a", "id_b")
         .distinct()
     )
     return pairs, metrics

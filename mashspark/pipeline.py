@@ -268,10 +268,11 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
                   ref_sketches: DataFrame | None = None) -> CrossDedupResult:
     """Batch cross-corpus dedup: flag every ``new_docs`` row that
     near-dups ANY ``ref_docs`` row (the new-crawl-vs-existing-corpus
-    stage; the batch analog of streaming.process_batch's history check).
+    stage; ``streaming.IncrementalDeduper`` runs the same cross band join
+    and two-table verify per micro-batch against its history store).
 
-    Candidates come from a cross band join (new bands x ref bands on
-    band_key), so no within-corpus pair is ever generated, and
+    Candidates come from ``lsh.cross_candidate_pairs`` (new bands x ref
+    bands on band_key), so no within-corpus pair is ever generated, and
     ``verify_pairs`` checks them against the two sketch tables in place
     (``id_a`` from the slice, ``id_b`` from the reference). Pass
     ``ref_sketches`` (e.g. from io.read_sketches) to read a committed
@@ -280,26 +281,18 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
 
     Cost model: per-run shuffle and materialization follow the slice,
     not the reference. A committed reference table is read in place
-    (only the slice and a freshly sketched reference are checkpointed).
-    When the slice's band entries fit a broadcast (16 B each, one
-    ``collect_at_most`` probe), the reference's band entries are
-    semi-joined against the slice's keys map-side: only those sharing a
-    key with the slice reach an exchange. Otherwise both sides' bucket
-    sizes are shuffled.
+    (only the slice and a freshly sketched reference are checkpointed),
+    and when the slice's band entries fit a broadcast the reference's
+    band entries are filtered to the slice's keys map-side.
 
-    Skew discipline: a boilerplate band key with A new and B ref docs
-    join-explodes to A*B candidates, so band keys whose candidate
-    PRODUCT ``A*B`` exceeds ``config.lsh.hard_bucket_cap`` are dropped
-    with per-side entry counts logged in ``metrics`` (same contract as
-    lsh.candidate_pairs: drops are visible, never silent). A dropped
-    key has entries on both sides, so the semi-join reduction leaves
-    the hot set and ``metrics`` unchanged.
+    Skew discipline: band keys whose candidate PRODUCT (new entries x
+    ref entries) exceeds ``config.lsh.hard_bucket_cap`` are dropped,
+    with per-side entry counts logged in ``metrics``.
     """
     config = config or PipelineConfig()
     sp = config.sketch
     spark = new_docs.sparkSession
     _ids0 = _persistent_rdd_ids(spark)
-    cap = int(config.lsh.hard_bucket_cap)
 
     # the slice's sketches feed the key probe, the band join and verify;
     # eager for the multi-consumer checkpoint-race reason of dedup_pipeline.
@@ -315,45 +308,12 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
             sp.check_compatible(emb)
         sk_ref = ref_sketches
 
-    bn = _lsh.explode_bands(sk_new).select(
-        "band_key", F.col("doc_id").alias("id_a"))
-    br = _lsh.explode_bands(sk_ref).select(
-        "band_key", F.col("doc_id").alias("id_b"))
-    keys = _verify.collect_at_most(
-        bn.select("band_key"), _verify._broadcast_threshold(spark) // 16)
-    if keys is not None:
-        # per-key slice counts on the driver; the reference keeps only
-        # the entries whose key the slice has, filtered map-side
-        sz_n = F.broadcast(spark.createDataFrame(
-            keys.groupby("band_key").size().reset_index(name="n_new"),
-            "band_key long, n_new long"))
-        br = br.join(sz_n.select("band_key"), "band_key", "left_semi")
-    else:
-        sz_n = bn.groupBy("band_key").agg(F.count("*").alias("n_new"))
-    sz_r = br.groupBy("band_key").agg(F.count("*").alias("n_ref"))
-    # cap the per-band candidate PRODUCT, not just each side: a band
-    # with 10^5 new x 10^5 ref entries is far under a per-side cap yet
-    # join-explodes to 10^10 rows. n_new*n_ref <= hard_bucket_cap
-    # bounds every band's candidate volume directly (and subsumes the
-    # per-side check, since the inner size-join keeps only bands
-    # present on both sides). Compared in double: the long product
-    # itself could overflow ANSI arithmetic at web-scale counts.
-    hot = (
-        sz_n.join(sz_r, "band_key")
-        .filter(F.col("n_new").cast("double") * F.col("n_ref") > cap)
-        .localCheckpoint(eager=True)
-    )
-    metrics = hot.agg(
-        F.count("*").alias("n_dropped_buckets"),
-        F.coalesce(F.sum("n_new"), F.lit(0)).alias("n_dropped_new_entries"),
-        F.coalesce(F.sum("n_ref"), F.lit(0)).alias("n_dropped_ref_entries"),
-    )
-    bn = bn.join(hot.select("band_key"), "band_key", "left_anti")
-    br = br.join(hot.select("band_key"), "band_key", "left_anti")
-    cand = (
-        bn.join(br, "band_key")
-        .select("id_a", "id_b")
-        .distinct()
+    cand, metrics = _lsh.cross_candidate_pairs(
+        _lsh.explode_bands(sk_new).select(
+            "band_key", F.col("doc_id").alias("id_a")),
+        _lsh.explode_bands(sk_ref).select(
+            "band_key", F.col("doc_id").alias("id_b")),
+        config.lsh.hard_bucket_cap,
     )
 
     matched = _verify.verify_pairs(

@@ -11,15 +11,19 @@ Spark-first composition:
   (no custom state), late data bounded by the watermark.
 * ``incremental_dedup`` — ``foreachBatch`` micro-batch loop: each batch is
   sketched with the SAME vectorized UDF as the batch pipeline, LSH-joined
-  against (a) the persisted sketch store (history) and (b) itself
-  (in-batch dups), Mash-exact verified, and appended to the store. The
-  store is bucketed parquet (Iceberg-shaped, like io.py); restarts resume
-  from the stream checkpoint and the already-appended store — the same
-  at-least-once + idempotent-append discipline the batch manifests use.
+  against itself (in-batch dups) and, through ``dedup_against``'s capped
+  cross band join, against the persisted sketch store (history),
+  Mash-exact verified (history pairs against the history's own sketch
+  rows, in place), and appended to the store; its checkpoints are
+  released per batch. The store is bucketed parquet (Iceberg-shaped,
+  like io.py); restarts resume from the stream checkpoint and the
+  already-appended store — the same at-least-once + idempotent-append
+  discipline the batch manifests use.
 
 State sizing at web scale: history is never re-sketched (band keys are
 stored, 8 B x <=32/doc), the batch side of the history join is small so
-AQE broadcasts it and the history side is scanned map-side with NO
+its band keys are broadcast (one ``collect_at_most`` probe) and the
+history side is filtered to them map-side with NO
 shuffle, and nothing driver-side grows with history size. The history
 store is laid out for PARTITION PRUNING:
 
@@ -36,12 +40,14 @@ store is laid out for PARTITION PRUNING:
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import lsh as _lsh
+from . import pipeline as _pipeline
 from . import verify as _verify
 from .params import PipelineConfig
 from .sketch import sketch_documents
@@ -97,7 +103,12 @@ class IncrementalDeduper:
     store_path/sketches: parquet (doc_id, sketch, card_est, band_key,
     fp1, fp2) appended per batch. decisions_path: parquet
     (doc_id, dup_of, batch_id) — one row per incoming doc; dup_of is the
-    matched historical/batch doc_id or NULL for novel docs.
+    smallest verified partner (an earlier doc of the same batch, or any
+    history doc but one with its own id) or NULL for novel docs. History
+    pairs come from ``lsh.cross_candidate_pairs`` (its per-band product
+    cap included) and verify against the history's sketch rows in place
+    (``verify_pairs(sketches_b=)``), so a re-crawled doc that reuses a
+    history id never hides the old page from the rest of the batch.
     """
 
     def __init__(self, store_path: str, config: PipelineConfig | None = None,
@@ -120,112 +131,84 @@ class IncrementalDeduper:
         """The foreachBatch callback (also callable directly in tests)."""
         cfg = self.config
         spark = batch_df.sparkSession
-        # .persist(), NOT localCheckpoint: checkpointing inside a
-        # foreachBatch callback breaks the microbatch's file-sink commit
-        # (reproduced in test_incremental_dedup_cross_batch), and the
-        # columnar-cache GC churn that makes the BATCH pipeline prefer
-        # localCheckpoint (pipeline.dedup_pipeline) is a per-trigger
-        # micro-batch non-issue here.
-        sk = sketch_documents(batch_df, cfg.sketch, cfg.lsh).persist()
+        ids0 = _pipeline._persistent_rdd_ids(spark)
+        try:
+            # eager: the sketches feed both joins, both verifies and the
+            # append (the checkpoint-race reason of pipeline.dedup_pipeline)
+            sk = sketch_documents(batch_df, cfg.sketch, cfg.lsh).localCheckpoint(
+                eager=True)
+            verify = functools.partial(
+                _verify.verify_pairs, sketches=sk, params=cfg.sketch,
+                jaccard_threshold=cfg.jaccard_threshold,
+                max_distance=cfg.max_distance, max_pvalue=cfg.max_pvalue,
+                prefix_filter=cfg.lsh.prefix)
 
-        # candidate pairs: in-batch LSH self-join ...
-        cand_self, _m = _lsh.candidate_pairs(
-            sk, band_doc_cap=cfg.lsh.band_doc_cap,
-            hard_bucket_cap=cfg.lsh.hard_bucket_cap,
-        )
-        pair_sources = [cand_self]
-        union_sk = sk
-        bb = sk.select("doc_id", F.explode("band_key").alias("band_key"))
-        hist_bands = self._history_bands(spark)
-        if hist_bands is not None:
-            # ... plus batch-vs-history band join, PARTITION-PRUNED: the
-            # batch's distinct band-key buckets are a tiny int set (<=
-            # batch_docs x bands), and the history band store is
-            # partitioned by that bucket, so the scan below touches only
-            # the buckets this batch can possibly match — constant per
-            # narrow batch, independent of history size. (History is
-            # never re-sketched; its band keys are stored exploded.)
-            batch_buckets = [
-                r.b for r in bb.select(
-                    F.pmod(F.col("band_key"), F.lit(self.n_band_buckets))
-                    .alias("b")).distinct().collect()
-            ]
-            hb = hist_bands.filter(
-                F.col("bucket").isin(batch_buckets)
-            ).select("doc_id", "band_key")
-            cross = (
-                hb.withColumnRenamed("doc_id", "id_a")
-                .join(bb.withColumnRenamed("doc_id", "id_b"), "band_key")
-                .select(
-                    F.least("id_a", "id_b").alias("id_a"),
-                    F.greatest("id_a", "id_b").alias("id_b"),
+            # a doc's partners: the smaller id of each in-batch pair ...
+            cand_self, _m = _lsh.candidate_pairs(
+                sk, band_doc_cap=cfg.lsh.band_doc_cap,
+                hard_bucket_cap=cfg.lsh.hard_bucket_cap,
+            )
+            partners = verify(cand_self).select(
+                F.col("id_b").alias("doc_id"), F.col("id_a").alias("partner"))
+            bb = _lsh.explode_bands(sk)
+            hist_bands = self._history_bands(spark)
+            if hist_bands is not None:
+                # ... and every verified history doc, from the band join of
+                # the batch against the history, PARTITION-PRUNED: the
+                # batch's distinct band-key buckets are a tiny int set (<=
+                # batch_docs x bands), and the history band store is
+                # partitioned by that bucket, so the scan below touches only
+                # the buckets this batch can possibly match — constant per
+                # narrow batch, independent of history size. (History is
+                # never re-sketched; its band keys are stored exploded.)
+                batch_buckets = [
+                    r.b for r in bb.select(
+                        F.pmod(F.col("band_key"), F.lit(self.n_band_buckets))
+                        .alias("b")).distinct().collect()
+                ]
+                hb = hist_bands.filter(
+                    F.col("bucket").isin(batch_buckets)
+                ).select("band_key", F.col("doc_id").alias("id_b"))
+                cross, _m = _lsh.cross_candidate_pairs(
+                    bb.select("band_key", F.col("doc_id").alias("id_a")), hb,
+                    cfg.lsh.hard_bucket_cap,
                 )
-                .filter(F.col("id_a") != F.col("id_b"))
-                .distinct()
-            )
-            # fetch ONLY the band-matched history sketches, again
-            # bucket-pruned on the doc_id partitioning of the store
-            matched = (
-                cross.select(F.col("id_a").alias("doc_id"))
-                .unionByName(cross.select(F.col("id_b").alias("doc_id")))
-                .join(sk.select("doc_id"), "doc_id", "left_anti")
-                .distinct()
-            )
-            doc_buckets = [
-                r.b for r in matched.select(
-                    F.pmod(F.col("doc_id"), F.lit(self.n_doc_buckets))
-                    .alias("b")).distinct().collect()
-            ]
-            if doc_buckets:
-                hist_sk = (
-                    spark.read.parquet(self.sketch_path)
-                    .filter(F.col("doc_bucket").isin(doc_buckets))
-                    .join(matched, "doc_id", "left_semi")
-                )
-                union_sk = hist_sk.select(sk.columns).unionByName(sk)
-                pair_sources.append(cross)
+                # a re-crawled doc keeps its id: never its own partner
+                cross = cross.filter(F.col("id_a") != F.col("id_b"))
+                # the history sketches, bucket-pruned on the doc_id
+                # partitioning of the store to the band-matched ids
+                doc_buckets = [
+                    r.b for r in cross.select(
+                        F.pmod(F.col("id_b"), F.lit(self.n_doc_buckets))
+                        .alias("b")).distinct().collect()
+                ]
+                if doc_buckets:
+                    hist_sk = spark.read.parquet(self.sketch_path).filter(
+                        F.col("doc_bucket").isin(doc_buckets))
+                    hist_pairs = verify(cross, sketches_b=hist_sk)
+                    partners = partners.unionByName(hist_pairs.select(
+                        F.col("id_a").alias("doc_id"),
+                        F.col("id_b").alias("partner")))
 
-        cands = pair_sources[0]
-        for p in pair_sources[1:]:
-            cands = cands.unionByName(p)
-        cands = cands.distinct()
-
-        pairs = _verify.verify_pairs(
-            cands, union_sk, cfg.sketch,
-            jaccard_threshold=cfg.jaccard_threshold,
-            prefix_filter=cfg.lsh.prefix,
-            # localCheckpoint inside foreachBatch breaks the micro-batch
-            # file-sink commit; per-batch tier-1 re-execution is cheap
-            materialize_tier1=False,
-        )
-
-        # decision: a new doc is a dup of its smallest-id verified partner
-        new_ids = sk.select("doc_id")
-        dup_of = (
-            pairs.select(F.col("id_b").alias("doc_id"), F.col("id_a").alias("partner"))
-            .unionByName(
-                pairs.select(F.col("id_a").alias("doc_id"), F.col("id_b").alias("partner"))
+            # decision: a batch doc is a dup of its smallest verified partner
+            dup_of = partners.groupBy("doc_id").agg(
+                F.min("partner").alias("dup_of"))
+            decisions = (
+                sk.select("doc_id").join(dup_of, "doc_id", "left")
+                .withColumn("batch_id", F.lit(int(batch_id)))
             )
-            .join(new_ids, "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.min("partner").alias("dup_of"))
-            # only partners that precede the doc (history or smaller id)
-            .filter(F.col("dup_of") < F.col("doc_id"))
-        )
-        decisions = (
-            new_ids.join(dup_of, "doc_id", "left")
-            .withColumn("batch_id", F.lit(int(batch_id)))
-        )
-        decisions.write.mode("append").parquet(self.decisions_path)
-        sk.withColumn(
-            "doc_bucket",
-            F.pmod(F.col("doc_id"), F.lit(self.n_doc_buckets)).cast("int"),
-        ).write.partitionBy("doc_bucket").mode("append").parquet(self.sketch_path)
-        bb.withColumn(
-            "bucket",
-            F.pmod(F.col("band_key"), F.lit(self.n_band_buckets)).cast("int"),
-        ).write.partitionBy("bucket").mode("append").parquet(self.bands_path)
-        sk.unpersist()
+            decisions.write.mode("append").parquet(self.decisions_path)
+            sk.withColumn(
+                "doc_bucket",
+                F.pmod(F.col("doc_id"), F.lit(self.n_doc_buckets)).cast("int"),
+            ).write.partitionBy("doc_bucket").mode("append").parquet(self.sketch_path)
+            bb.withColumn(
+                "bucket",
+                F.pmod(F.col("band_key"), F.lit(self.n_band_buckets)).cast("int"),
+            ).write.partitionBy("bucket").mode("append").parquet(self.bands_path)
+        finally:
+            _pipeline._release_rdds(
+                spark, _pipeline._persistent_rdd_ids(spark) - ids0)
 
 
 def incremental_dedup(stream_df: DataFrame, store_path: str,

@@ -248,8 +248,7 @@ def _attach(cands: DataFrame, sk: DataFrame, id_col: str, suffix: str,
 
 def _attach_sketches(cands: DataFrame, sketches: DataFrame,
                      sketches_b: DataFrame | None, params: SketchParams,
-                     prefix: tuple[int, float] | None = None,
-                     materialize_tier1: bool = True) -> DataFrame:
+                     prefix: tuple[int, float] | None = None) -> DataFrame:
     """(id_a, id_b) pairs -> (id_a, id_b, sketch_a, card_a, sketch_b,
     card_b), the one attach behind ``verify_pairs``, ``contain_pairs``
     and ``cross_dist``. ``id_a`` takes its sketch from ``sketches`` and
@@ -296,26 +295,22 @@ def _attach_sketches(cands: DataFrame, sketches: DataFrame,
             (F.col("_p.common") / F.greatest(F.col("_p.denom"), F.lit(1))).alias("_jpre"),
         )
         cands = tier1.filter(F.col("_jpre") >= floor).select("id_a", "id_b")
-        if materialize_tier1:
-            # materialize the survivor list ONCE (16 B rows): it is
-            # consumed by the tier-2 attach chain AND by the survivor-id
-            # set of _survivor_sketches (its size probe, plus both union
-            # branches on the shuffled path) — without this, the whole
-            # tier-1 subtree (attach joins + prefix-verify UDF over EVERY
-            # candidate) re-executes once per consumer (measured 3-5x in
-            # the optimized plan; exchange reuse does not cover the
-            # differently-partitioned branches). Callers inside
-            # foreachBatch must pass materialize_tier1=False —
-            # localCheckpoint there breaks the micro-batch file-sink
-            # commit (see streaming.process_batch) — and accept the cheap
-            # per-batch re-execution instead. Block release is the
-            # caller's pipeline-level concern (pipeline.DedupResult
-            # .release() sweeps every checkpoint created during the run).
-            # eager: on the shuffled path the survivor list has three
-            # consumers whose AQE jobs launch concurrently; a lazy
-            # checkpoint makes their tasks race on the checkpoint lock
-            # (see lsh.candidate_pairs).
-            cands = cands.localCheckpoint(eager=True)
+        # materialize the survivor list ONCE (16 B rows): it is consumed
+        # by the tier-2 attach chain AND by the survivor-id set of
+        # _survivor_sketches (its size probe, plus both union branches
+        # on the shuffled path) — without this, the whole tier-1 subtree
+        # (attach joins + prefix-verify UDF over EVERY candidate)
+        # re-executes once per consumer (measured 3-5x in the optimized
+        # plan; exchange reuse does not cover the differently-partitioned
+        # branches). Block release is the caller's concern
+        # (pipeline.DedupResult.release(), CrossDedupResult.release() and
+        # the streaming deduper's per-batch release sweep every
+        # checkpoint created during the run).
+        # eager: on the shuffled path the survivor list has three
+        # consumers whose AQE jobs launch concurrently; a lazy
+        # checkpoint makes their tasks race on the checkpoint lock
+        # (see lsh.candidate_pairs).
+        cands = cands.localCheckpoint(eager=True)
         sk_a, sk_b = _survivor_sketches(cands, sk_a, sk_b)
     return attach(cands, sk_a, sk_b, F.col("sketch"))
 
@@ -330,7 +325,6 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
                  max_pvalue: float | None = None,
                  with_pvalue: bool = False,
                  prefix_filter: int | None = 128,
-                 materialize_tier1: bool = True,
                  sketches_b: DataFrame | None = None) -> DataFrame:
     """Attach Mash-exact (common, denom, jaccard, mash_dist[, p_value]) to a
     candidate-pair DataFrame (id_a, id_b).
@@ -362,8 +356,7 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
         t = float(jaccard_threshold)
         sigma = math.sqrt(max(t * (1.0 - t), 0.05) / float(prefix_filter))
         prefix = (int(prefix_filter), t - max(_PREFIX_MARGIN, 6.0 * sigma))
-    df = _attach_sketches(cands, sketches, sketches_b, params, prefix=prefix,
-                          materialize_tier1=materialize_tier1)
+    df = _attach_sketches(cands, sketches, sketches_b, params, prefix=prefix)
     vu = make_verify_udf(params.s)
     df = df.withColumn("_v", vu(F.col("sketch_a"), F.col("sketch_b")))
     df = df.select(

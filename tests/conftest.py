@@ -11,7 +11,16 @@ REF = "/root/reference"
 TESTDATA = "/root/testdata"
 
 
+# the reference checkout's golden files (test/ref/*, test/*.fastq); tests
+# that read them skip when it is absent rather than erroring
+HAVE_REF = os.path.isdir(REF)
+SKIP_NO_REF = f"reference golden files not found under {REF}"
+requires_reference = pytest.mark.skipif(not HAVE_REF, reason=SKIP_NO_REF)
+
+
 def load_golden_json(name: str) -> dict:
+    if not HAVE_REF:
+        pytest.skip(SKIP_NO_REF)
     with open(os.path.join(REF, "test", "ref", name)) as f:
         return json.load(f)
 

@@ -19,7 +19,7 @@ import numpy as np
 import pytest
 
 from mashspark import compare, dna, hashing, minhash
-from tests.conftest import REF, golden_sketch
+from tests.conftest import REF, golden_sketch, requires_reference
 
 K, S, SEED = 21, 1000, 42
 KMER_SPACE = 4.0**21  # ACGT alphabet (Sketch.cpp:58-61)
@@ -136,12 +136,14 @@ def reads_sketch(reads_golden):
     return sk
 
 
+@requires_reference
 def test_reads_sketch_bit_exact(reads_sketch, reads_golden):
     golden = golden_sketch(reads_golden, 0)
     assert len(reads_sketch) == len(golden) == S
     assert np.array_equal(reads_sketch, golden)
 
 
+@requires_reference
 def test_reads_kmv_length(reads_sketch, reads_golden):
     assert minhash.kmv_set_size(reads_sketch) == reads_golden["sketches"][0]["length"]
 
@@ -161,6 +163,7 @@ def _golden_dist_rows():
     return rows
 
 
+@requires_reference
 def test_dist_goldens(genomes_golden, reads_golden):
     reads = golden_sketch(reads_golden, 0)
     reads_len = reads_golden["sketches"][0]["length"]

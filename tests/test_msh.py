@@ -28,7 +28,7 @@ from mashspark.msh import (MshReference, MshSketchSet, msh_to_sketches,
                            read_msh, write_msh)
 from mashspark.params import SketchParams
 
-from conftest import REF, load_golden_json
+from conftest import REF, load_golden_json, requires_reference
 
 
 def _set_from_golden(golden: dict) -> MshSketchSet:
@@ -125,6 +125,7 @@ def test_counts_and_32bit_hashes_roundtrip(tmp_path):
     assert abs(got.error - 0.05) < 1e-7
 
 
+@requires_reference
 def test_spark_paste_and_dist_from_msh(spark, genomes_msh, reads_msh):
     """Interop end to end: the .msh-loaded tables run through paste and
     cross_dist, and cross_dist reproduces every genomes.dist golden row

@@ -246,10 +246,12 @@ def _duplicated_udf_calls(plan: str) -> dict:
     return {sig: nodes for sig, nodes in calls.items() if len(nodes) > 1}
 
 
-def test_no_duplicated_udf_evaluation(spark, docs_parquet):
+def test_no_duplicated_udf_evaluation(spark, docs_parquet, monkeypatch):
     """Single-eval audit over every operator whose plan chains a python
     UDF into a derived-column filter: each UDF invocation signature must
-    appear in exactly one eval node."""
+    appear in exactly one eval node. verify's tier 1 runs inside the
+    survivor checkpoint, so the plan of every frame verify checkpoints is
+    audited too."""
     from mashspark.screen import screen
     from mashspark.substring import substring_dup_spans
     from mashspark.verify import contain_pairs, verify_pairs
@@ -263,13 +265,28 @@ def test_no_duplicated_udf_evaluation(spark, docs_parquet):
         .filter(F.col("id_a") < F.col("id_b"))
         .limit(100)
     )
+    # in Spark 4 pyspark.sql.DataFrame is only the abstract parent:
+    # patch the concrete class the frames are built from
+    checkpointed = []
+    local_checkpoint = type(cands).localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        checkpointed.append(plan_of(df))
+        return local_checkpoint(df, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(type(cands), "localCheckpoint", spy)
+        verify_prefix = plan_of(verify_pairs(
+            cands, sk, PARAMS, jaccard_threshold=0.5, prefix_filter=16))
+    assert any("EvalPython" in p for p in checkpointed), \
+        "verify+prefix checkpointed no tier-1 plan"
     plans = {
         "verify+pvalue": plan_of(verify_pairs(
             cands, sk, PARAMS, jaccard_threshold=0.5, max_pvalue=1e-5,
             prefix_filter=None)),
-        "verify+prefix": plan_of(verify_pairs(
-            cands, sk, PARAMS, jaccard_threshold=0.5, prefix_filter=16,
-            materialize_tier1=False)),
+        "verify+prefix": verify_prefix,
+        **{f"verify+prefix checkpoint {i}": p
+           for i, p in enumerate(checkpointed)},
         "contain": plan_of(contain_pairs(cands, sk, PARAMS)),
         "screen": plan_of(screen(
             sketch_documents(docs.filter(F.col("doc_id") < 20), PARAMS, LSH),

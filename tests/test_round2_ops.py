@@ -15,7 +15,7 @@ from mashspark import compare, minhash
 from mashspark.hashing import decode_sketch_bytes, encode_signed
 from mashspark.params import LSHParams, SketchParams
 from mashspark.webtext import webtext_spark_df
-from tests.conftest import REF, golden_sketch
+from tests.conftest import REF, golden_sketch, requires_reference
 
 K, S, SEED = 21, 1000, 42
 KMER_SPACE = 4.0**21
@@ -113,6 +113,7 @@ def _golden_screen_rows():
     return rows
 
 
+@requires_reference
 def test_screen_goldens_through_spark_op(spark, genomes_golden):
     """The reference's own `mash screen genomes.msh reads1.fastq
     reads2.fastq` fixture reproduced through screen() — the full Spark
@@ -212,6 +213,7 @@ def test_mixture_set_size_matches_numpy(spark):
 # ---------------------------------------------------------------------------
 
 
+@requires_reference
 def test_dist_goldens_through_spark_op(spark, genomes_golden):
     """Every genomes.dist row (distance, p-value, common/denom) reproduced
     by verify_pairs — the production Spark operator, not the numpy core."""

@@ -19,7 +19,7 @@ import numpy as np
 import pytest
 
 from mashspark import compare, dna, minhash
-from tests.conftest import REF, golden_sketch
+from tests.conftest import REF, golden_sketch, requires_reference
 
 K, S, SEED = 21, 1000, 42
 KMER_SPACE = 4.0**21
@@ -41,6 +41,7 @@ def _golden_screen_rows():
     return rows
 
 
+@requires_reference
 def test_screen_goldens(genomes_golden, mixture_hashes):
     mix_vals, mix_counts = np.unique(mixture_hashes, return_counts=True)
     set_size = minhash.kmv_set_size(minhash.bottom_k(mixture_hashes, S))

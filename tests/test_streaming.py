@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mashspark.params import PipelineConfig, SketchParams
+from mashspark.params import LSHParams, PipelineConfig, SketchParams
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the market report "
@@ -34,16 +34,19 @@ def _write_chunk(path, rows):
     )
 
 
+OTHER = (
+    "an entirely unrelated second document about gardening tools and "
+    "winter recipes with long paragraphs describing soil preparation "
+    "seed selection watering schedules and harvest storage methods "
+    "for beginners and experts alike in cold northern climates "
+) * 2
+
+
 @pytest.fixture()
 def stream_dir(tmp_path):
     d = tmp_path / "in"
     d.mkdir()
-    other = (
-        "an entirely unrelated second document about gardening tools and "
-        "winter recipes with long paragraphs describing soil preparation "
-        "seed selection watering schedules and harvest storage methods "
-        "for beginners and experts alike in cold northern climates "
-    ) * 2
+    other = OTHER
     # chunk 0: two distinct base docs
     _write_chunk(
         d / "chunk0.parquet",
@@ -64,6 +67,24 @@ def stream_dir(tmp_path):
 
 
 SCHEMA = "doc_id long, text string, warc_ts timestamp"
+
+
+def _decide(spark, tmp_path, in_dir, cfg):
+    """Run the incremental deduper over ``in_dir`` (one micro-batch per
+    file) and return its decisions as {(doc_id, batch_id): dup_of}."""
+    from mashspark.streaming import incremental_dedup
+
+    store = str(tmp_path / "store")
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(in_dir))
+    )
+    q = incremental_dedup(stream, store, cfg,
+                          checkpoint=str(tmp_path / "ckpt"))
+    q.awaitTermination(600)
+    dec = spark.read.parquet(os.path.join(store, "decisions"))
+    return {(r.doc_id, r.batch_id): r.dup_of for r in dec.collect()}
 
 
 def test_incremental_dedup_cross_batch(spark, stream_dir, tmp_path):
@@ -99,6 +120,45 @@ def test_incremental_dedup_cross_batch(spark, stream_dir, tmp_path):
     q2 = incremental_dedup(stream, store, cfg, checkpoint=ckpt)
     q2.awaitTermination(600)
     assert spark.read.parquet(os.path.join(store, "decisions")).count() == 5
+
+
+PAGE_A = BASE + "alpha section one"
+
+
+@pytest.mark.parametrize("batch_ids, cap, want", [
+    # a re-crawled page keeps its id (``mashspark stream`` ids are
+    # xxhash64(url)): doc 5 returns with new text while doc 9 carries
+    # doc 5's old text. History verifies against its own sketch rows,
+    # so doc 9 still matches the old page; doc 5 is never its own partner
+    ((5, 9), LSHParams().hard_bucket_cap, 5),
+    # the history band join drops bands whose batch x history entry
+    # product exceeds hard_bucket_cap, as dedup_against does: at cap 0
+    # the exact copy doc 9 has no history candidate left
+    ((7, 9), 0, None),
+], ids=["reused-history-id", "bucket-cap-0"])
+def test_incremental_dedup_history_pairs(spark, tmp_path, batch_ids, cap, want):
+    d = tmp_path / "in"
+    d.mkdir()
+    _write_chunk(d / "chunk0.parquet", [_doc(5, PAGE_A)])
+    other_id, copy_id = batch_ids
+    _write_chunk(d / "chunk1.parquet", [_doc(other_id, OTHER, ts_minute=5),
+                                        _doc(copy_id, PAGE_A, ts_minute=5)])
+    cfg = PipelineConfig(sketch=SketchParams(k=21, s=256),
+                         lsh=LSHParams(hard_bucket_cap=cap),
+                         jaccard_threshold=0.7)
+    got = _decide(spark, tmp_path, d, cfg)
+    assert got == {(5, 0): None, (other_id, 1): None, (copy_id, 1): want}
+
+
+def test_incremental_dedup_honours_max_distance(spark, stream_dir, tmp_path):
+    """``max_distance`` filters streaming pairs as it filters the batch
+    engines': at 0.0 only the exact copy (doc 12 of doc 2) is a dup, and
+    the near-dup doc 10 becomes novel."""
+    cfg = PipelineConfig(sketch=SketchParams(k=21, s=256),
+                         jaccard_threshold=0.7, max_distance=0.0)
+    got = {doc: dup for (doc, _b), dup in
+           _decide(spark, tmp_path, stream_dir, cfg).items()}
+    assert got == {1: None, 2: None, 10: None, 11: None, 12: 2}
 
 
 def test_streaming_store_band_bucket_pruning(spark, stream_dir, tmp_path):

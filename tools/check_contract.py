@@ -16,6 +16,7 @@ restores the float-tolerant compare for debugging genuine value drift.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -23,7 +24,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it was copied to
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from mashspark.session import get_spark  # noqa: E402
