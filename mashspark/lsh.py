@@ -11,22 +11,31 @@ boilerplate-heavy hot buckets):
 1. **Exact-duplicate pre-collapse** happens upstream (``pipeline.py``):
    docs with identical sketches never reach the band join, which removes
    the dominant web-scale skew source (mirrored/templated pages).
-2. Buckets with <= band_doc_cap docs: plain self-join; AQE skew-join
-   splitting handles residual imbalance.
-3. Buckets with band_doc_cap < n <= hard_bucket_cap: **star candidates**
-   — each member pairs with the bucket's min doc_id only (linear, not
-   O(n^2); see the hot-path comment in ``candidate_pairs`` for why this
-   preserves both cluster connectivity and pair recall).
-4. Buckets with n > hard_bucket_cap: dropped, with the drop count and the
-   number of affected docs returned as metrics (no silent caps) — docs in
-   such buckets still pair through their other, colder bands.
+2. **One band exchange.** The (band_key, doc_id) entries are shuffled
+   once, by band_key; a window over that partitioning counts each bucket
+   and finds its minimum doc_id, so bucket sizes cost no second shuffle
+   and no hot-key broadcast. Web band keys are almost all singletons, so
+   a map-side-combined size exchange would write about one row per entry.
+3. Buckets with <= band_doc_cap docs: plain self-join, co-partitioned on
+   that exchange. Buckets with band_doc_cap < n <= hard_bucket_cap:
+   **star candidates**, each member paired with the bucket's min doc_id
+   only (linear, not O(n^2); see the comments in ``candidate_pairs`` for
+   why this preserves both cluster connectivity and pair recall). Both
+   come out of the one self-join: its left side keeps only the hub entry
+   of a hot bucket.
+4. Buckets with n > hard_bucket_cap: dropped whatever band_doc_cap is,
+   with the drop count and the band entries affected returned as metrics
+   (no silent caps); docs in such buckets still pair through their
+   other, colder bands. A hot or dropped bucket still crosses the
+   exchange whole and lands in one task, where it is counted and then
+   starred or dropped: linear work, never the quadratic self-join.
 """
 
 from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import verify as _verify
@@ -111,122 +120,108 @@ def candidate_pairs(sketches: DataFrame, band_doc_cap: int = 1000,
                     checkpoint: bool = True):
     """Distinct candidate (id_a, id_b) pairs, id_a < id_b, plus skew metrics.
 
-    Returns (pairs_df, metrics_df). metrics_df: one row —
-    (n_buckets, n_hot_buckets, n_dropped_buckets, n_dropped_docs — the
-    last counts band ENTRIES in dropped buckets, an upper bound on
-    affected docs).
+    Returns (pairs_df, metrics_df). metrics_df is one row over the
+    buckets of two or more band entries, each figure 0 (never NULL) on a
+    corpus without such buckets:
+
+    * ``n_buckets``: those buckets;
+    * ``n_hot_buckets``: the ones above ``band_doc_cap`` (starred, or
+      dropped when also above ``hard_bucket_cap``);
+    * ``n_dropped_buckets``: the ones above ``hard_bucket_cap``, which
+      yield no pair whatever ``band_doc_cap`` is;
+    * ``n_dropped_docs``: the band ENTRIES of the dropped buckets (a doc
+      in k dropped buckets counts k), an upper bound on affected docs.
+
+    Every bucket of at most ``min(band_doc_cap, hard_bucket_cap)``
+    entries is self-joined; every bucket of ``band_doc_cap < n <=
+    hard_bucket_cap`` pairs each member with its minimum doc_id only.
+
+    One exchange: the band relation is shuffled once, by ``band_key``. A
+    window on that partitioning counts each bucket and finds its minimum
+    doc_id; the self-join's two sides and the metrics read the window
+    output co-partitioned, with no further exchange. The join's left side
+    keeps every entry of a cold bucket but only the hub entry of a hot
+    one, so one ``id_a < id_b`` join yields the cold all-pairs and the
+    hot star pairs alike, linear in a hot bucket's size.
+
+    The trade-off, against the earlier map-side-combined size exchange
+    plus broadcast hot-key anti/semi-joins: a hot or over-cap bucket
+    crosses the exchange whole and lands in one task, where the window
+    counts it (spilling past its in-memory buffer) before it is starred
+    or dropped. That work is linear in the bucket, never quadratic: the
+    all-pairs join only sees buckets of at most ``band_doc_cap``. And
+    AQE's skew-join rule no longer splits the self-join, since the
+    window sits between it and the exchange. In exchange, the size
+    shuffle is gone: web band keys are almost all singletons, so it
+    wrote about one row per entry, and at any scale where singleton keys
+    dominate one exchange of the entries writes less in total.
 
     ``eager``/``checkpoint`` are RETAINED FOR API COMPATIBILITY but are
     no-ops since round 6, and a non-default value warns
     ``DeprecationWarning``. Earlier rounds eagerly localCheckpointed the
     band relation and the bucket-size table to stop concurrent AQE
-    exchange-materialization jobs racing on a lazy checkpoint's lock
-    (a measured 17 s zero-CPU stall). Round-6 re-measure: with no
-    checkpoint there is no lock to race on, every consumer (sizes
-    groupBy, hot/cold anti+semi branches, the self-join's two sides)
-    sits in the ONE downstream plan where ReuseExchange shares the
-    band-key exchange, and the band explode itself is cheap JVM column
-    work hanging off the caller's materialized sketch relation — while
-    each eager checkpoint serialized a full extra scan job per run.
-    Interleaved fresh-JVM A/B on the pinned scale job, identical
-    candidate counts: 8 cores 11.8-14.5 s -> 10.6-13.0 s (and the
-    earlier sizes-checkpoint removal measured 14.9-16.2 -> 11.1-12.8);
-    2 cores 39.7-45.9 -> 35.0-38.9. Callers that collect ``metrics``
-    later re-run the cheap explode+groupBy — rare and off the hot path.
+    exchange-materialization jobs racing on a lazy checkpoint's lock (a
+    measured 17 s zero-CPU stall). Nothing here is checkpointed now, so
+    there is no lock to race on: every consumer of the band relation sits
+    in the one downstream plan that reads its single exchange. Callers
+    that collect ``metrics`` re-run the explode, the exchange and the
+    window in their own job.
     """
     if eager or not checkpoint:
         warnings.warn(
             "candidate_pairs: 'eager' and 'checkpoint' have no effect "
             "and will be removed; stop passing them",
             DeprecationWarning, stacklevel=2)
-    bands = explode_bands(sketches)
-
-    # bucket sizes via groupBy, NOT a window: groupBy does map-side
-    # partial aggregation (a hot boilerplate bucket is pre-reduced inside
-    # every input partition before the exchange), while a window over
-    # partitionBy(band_key) funnels the WHOLE mega-bucket into one
-    # unsplittable task at web scale. The size table is only consulted as
-    # two SMALL key sets (hot keys, pruned singleton keys are implicit:
-    # singleton buckets simply produce no self-join output), so the fat
-    # band relation is never joined against an O(buckets) table.
-    sizes = (
-        bands.groupBy("band_key")
-        .agg(F.count("*").alias("bucket_n"))
-    )
-    multi = sizes.filter(F.col("bucket_n") > 1)
-
-    # coalesce every sum: on a corpus with no multi-doc buckets `multi`
-    # is empty and bare F.sum yields NULL, not 0 — operator code doing
-    # `row["n_dropped_docs"] > 0` would crash on None. n_dropped_docs
-    # counts band ENTRIES in dropped buckets (a doc in k dropped buckets
-    # contributes k) — the upper bound on affected docs, stated as such.
-    metrics = multi.agg(
-        F.count("*").alias("n_buckets"),
-        F.coalesce(
-            F.sum((F.col("bucket_n") > band_doc_cap).cast("long")),
-            F.lit(0).cast("long")).alias("n_hot_buckets"),
-        F.coalesce(
-            F.sum((F.col("bucket_n") > hard_bucket_cap).cast("long")),
-            F.lit(0).cast("long")).alias("n_dropped_buckets"),
-        F.coalesce(
-            F.sum(F.when(F.col("bucket_n") > hard_bucket_cap,
-                         F.col("bucket_n")).otherwise(0)),
-            F.lit(0).cast("long")).alias("n_dropped_docs"),
+    bucket = Window.partitionBy("band_key")
+    n = F.col("bucket_n")
+    bands = explode_bands(sketches).select(
+        "band_key", "doc_id",
+        F.count("*").over(bucket).alias("bucket_n"),
+        F.min("doc_id").over(bucket).alias("hub"),
     )
 
-    # hot/dropped key sets are tiny (boilerplate phenomena — a handful of
-    # keys even at web scale); AQE broadcasts them, so tagging the band
-    # relation costs no extra shuffle and no unsplittable stage
-    hot_keys = sizes.filter(F.col("bucket_n") > band_doc_cap).select(
-        "band_key", "bucket_n"
-    )
-    cold = bands.join(hot_keys.select("band_key"), "band_key", "left_anti")
-    hot = bands.join(
-        hot_keys.filter(F.col("bucket_n") <= hard_bucket_cap), "band_key", "left_semi"
-    )
+    # coalesce every sum: bare F.sum over no multi-entry bucket is NULL
+    def n_where(cond, value=F.lit(1)):
+        return F.coalesce(F.sum(F.when(cond, value).otherwise(0)),
+                          F.lit(0)).cast("long")
 
-    # --- cold path: plain self-join per bucket (AQE splits residual skew).
-    # SHUFFLE_HASH hint on the self-join: both sides are the O(corpus)
-    # band relation, so a broadcast is never the right plan — but at
-    # bench scale the relation slips under autoBroadcastJoinThreshold
-    # and AQE picks BroadcastHashJoin, whose HashedRelation build is
-    # SERIAL DRIVER time (measured: a 4.5 s zero-task gap at 224k docs,
-    # the single largest serial cost in the timed scaling job; it taxes
-    # a short high-parallelism leg ~3x harder than the long low leg).
-    # The hint keeps the join shuffled-and-parallel at every scale.
-    left = cold.withColumnRenamed("doc_id", "id_a")
-    right = cold.withColumnRenamed("doc_id", "id_b")
-    cold_pairs = left.hint("shuffle_hash").join(right, ["band_key"]).filter(
-        F.col("id_a") < F.col("id_b")
-    )
-
-    # --- hot path: STAR candidates (linear in bucket size).
-    # A hot bucket is either (a) boilerplate-dominated — thousands of docs
-    # sharing only a template fragment; all-pairs enumeration is O(n^2)
-    # junk that exact verification would reject anyway — or (b) a genuine
-    # near-dup mega-family, where all-pairs is equally infeasible at any
-    # scale and cluster connectivity only needs a spanning set. Either
-    # way, connecting every member to the bucket's minimum doc_id gives a
-    # LINEAR candidate set that (b)-case verification turns into a
-    # connected star, while (a)-case pairs die in verification at linear
-    # cost. True pairs inside hot buckets additionally co-occur in their
-    # colder content bands, so pair-level recall survives (asserted by the
-    # recall gate test). Salting is applied to the star hub join itself:
-    # the hub side is tiny and broadcast, so no task holds a whole bucket.
-    hubs = hot.groupBy("band_key").agg(F.min("doc_id").alias("hub"))
-    hot_pairs = (
-        hot.join(hubs, "band_key")  # AQE broadcasts when hubs is small
-        .filter(F.col("doc_id") != F.col("hub"))
-        .select(
-            "band_key",
-            F.least("doc_id", "hub").alias("id_a"),
-            F.greatest("doc_id", "hub").alias("id_b"),
+    metrics = (
+        bands.filter(n > 1)
+        .groupBy("band_key").agg(F.max("bucket_n").alias("bucket_n"))
+        .agg(
+            F.count("*").alias("n_buckets"),
+            n_where(n > band_doc_cap).alias("n_hot_buckets"),
+            n_where(n > hard_bucket_cap).alias("n_dropped_buckets"),
+            n_where(n > hard_bucket_cap, n).alias("n_dropped_docs"),
         )
     )
 
+    # SHUFFLE_HASH hint: both sides are the O(corpus) band relation, so a
+    # broadcast is never the right plan, but at bench scale it slips
+    # under autoBroadcastJoinThreshold and AQE would pick
+    # BroadcastHashJoin, whose HashedRelation build is SERIAL DRIVER time
+    # (measured: a 4.5 s zero-task gap at 224k docs). The hinted left
+    # side is the build side: for a hot bucket, its one hub row.
+    kept = bands.filter((n > 1) & (n <= hard_bucket_cap))
+    left = kept.filter(
+        (n <= band_doc_cap) | (F.col("doc_id") == F.col("hub"))
+    ).select("band_key", F.col("doc_id").alias("id_a"))
+    right = kept.select("band_key", F.col("doc_id").alias("id_b"))
+
+    # A hot bucket is either (a) boilerplate-dominated, thousands of docs
+    # sharing only a template fragment, whose all-pairs is O(n^2) junk
+    # that verification would reject anyway, or (b) a genuine near-dup
+    # mega-family, where all-pairs is equally infeasible and cluster
+    # connectivity only needs a spanning set. Either way the star on the
+    # bucket's minimum doc_id is a LINEAR candidate set that (b)-case
+    # verification turns into a connected star, while (a)-case pairs die
+    # in verification at linear cost. True pairs inside hot buckets also
+    # co-occur in their colder content bands, so pair-level recall
+    # survives (asserted by the recall gate test).
     pairs = (
-        cold_pairs.select("id_a", "id_b")
-        .unionByName(hot_pairs.select("id_a", "id_b"))
+        left.hint("shuffle_hash").join(right, "band_key")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
         .distinct()
     )
     return pairs, metrics

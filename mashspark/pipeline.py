@@ -17,7 +17,9 @@ Scale notes (the 100 TB story):
   joins read it shuffle-free;
 * exact-dup collapse shuffles only (doc_id, fp128) — 24 B/doc — and
   removes the mirrored/templated mega-buckets (skew source #1) before LSH;
-* the band join shuffles (band_key, doc_id) — 16 B per band entry, NOT the sketches;
+* the band join shuffles (band_key, doc_id) — 16 B per band entry, NOT the
+  sketches — once: bucket sizes, the self-join and the star hubs all run
+  co-partitioned on that one exchange;
 * every groupBy/join key is salted or AQE-split per ``lsh.py``.
 """
 
@@ -111,10 +113,10 @@ def dedup_pipeline(docs: DataFrame, config: PipelineConfig | None = None,
     sp = config.sketch
     spark = docs.sparkSession
     # snapshot the persistent-RDD registry: every localCheckpoint created
-    # during this run (sketches, verify tier-1 survivors, pairs, AND
-    # lsh.candidate_pairs' internal band/size checkpoints) is new-in-span
-    # and gets released by DedupResult.release() — a plain unpersist() on
-    # the returned DataFrames would silently skip all of them.
+    # during this run (sketches, exact groups, verify tier-1 survivors,
+    # pairs) is new-in-span and gets released by DedupResult.release() —
+    # a plain unpersist() on the returned DataFrames would silently skip
+    # all of them.
     _ids0 = _persistent_rdd_ids(spark)
     if num_buckets is None:
         num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))

@@ -104,6 +104,14 @@ def get_spark(cores: int | None = None, shuffle_partitions: int | None = None,
         # MASHSPARK_TASK_CPUS (e.g. 2 for pandas-UDF-heavy jobs where
         # the JVM conversion side stays hot).
         .config("spark.task.cpus", str(_task_cpus(cores)))
+        # CodeGenerator's class cache is keyed by (class loader, source),
+        # and one dedup job compiles 68-88 units (driver plus task
+        # loaders). At the default 100 Guava evicts per segment before
+        # that total, so depending on the JVM's hash layout byte-identical
+        # units were recompiled on every job (measured, 4 vCPU: 21-22 per
+        # crawl-dense job in 2 of 4 sessions); at 1000, none after the
+        # first job.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if local_dir:
         b = b.config("spark.local.dir", local_dir)

@@ -7,8 +7,9 @@ Each assertion names the scale behavior it guards:
   must not read columns or row groups the query doesn't touch);
 * the sketch stage is map-only (no Exchange before the UDF — sketching
   10^12 docs must not shuffle the corpus);
-* exact-collapse and the LSH bucket sizing do partial (map-side)
-  aggregation before their exchange;
+* exact-collapse does partial (map-side) aggregation before its
+  exchange, and the LSH band entries cross one exchange (no separate
+  bucket-size shuffle);
 * the screen hash join broadcasts the reference index (mixture side must
   stream map-side, never shuffle on hash);
 * verify's fat-sketch joins hash, not sort-merge (8 KB binary rows must
@@ -393,3 +394,46 @@ def test_pq_search_blocked_no_driver_queries(spark):
         want = [int(i) for i in order if i != q][:3]
         got = [rows[(q, r)] for r in (1, 2, 3)]
         assert got == want, (q, got, want)
+
+
+
+def _stage_shuffle_writes(spark, action) -> list[int]:
+    """Shuffle records written by each completed stage of the jobs that
+    ``action`` runs, read from the status store: a stage that ran counts
+    even where AQE later prunes its branch from the final plan."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs():
+        sc.listenerBus().waitUntilEmpty()
+        js = sc.statusStore().jobsList(None)
+        return [js.apply(i) for i in range(js.size())]
+
+    before = {j.jobId() for j in jobs()}
+    action()
+    stage_ids = {ids.apply(k) for j in jobs() if j.jobId() not in before
+                 for ids in [j.stageIds()] for k in range(ids.size())}
+    stages = [sc.statusStore().lastStageAttempt(sid) for sid in stage_ids]
+    return [st.shuffleWriteRecords() for st in stages
+            if str(st.status()) == "COMPLETE"]
+
+
+def test_lsh_band_entries_cross_one_exchange(spark):
+    """The band relation is shuffled once, by band_key: bucket sizes, the
+    self-join and the star hubs all read that one exchange. Web band keys
+    are almost all singletons, so a separate map-side-combined size
+    exchange would write about one row per entry, a second full copy."""
+    import random
+
+    from mashspark.lsh import candidate_pairs
+
+    rng = random.Random(11)
+    rows = [(d, [rng.getrandbits(62) for _ in range(16)]) for d in range(2000)]
+    # ten doc pairs share half their keys, so the self-join emits pairs
+    for d in range(0, 30, 3):
+        rows[d + 1] = (d + 1, rows[d][1][:8] + rows[d + 1][1][8:])
+    sk = spark.createDataFrame(rows, "doc_id long, band_key array<long>")
+    pairs, _metrics = candidate_pairs(sk, band_doc_cap=4, hard_bucket_cap=8)
+    got = []
+    writes = _stage_shuffle_writes(spark, lambda: got.extend(pairs.collect()))
+    assert len(got) == 10
+    assert sum(w >= 2000 * 16 // 2 for w in writes) == 1, writes

@@ -1,4 +1,5 @@
-"""Session factory guards that must hold without starting a session."""
+"""Session factory guards. All but the codegen-cache test hold without
+starting a session."""
 
 import os
 
@@ -28,3 +29,24 @@ def test_default_cores_follow_affinity(monkeypatch):
     assert _default_cores() == len(os.sched_getaffinity(0))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert _default_cores() == 3
+
+
+def test_repeated_query_reuses_compiled_code(spark):
+    """A query run again after ~150 other compiled plans compiles
+    nothing: the codegen class cache outlives one job's worth of
+    distinct whole-stage units (a dedup job leaves ~75), so repeated
+    jobs do not recompile byte-identical code."""
+    from pyspark.sql import functions as F
+
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+
+    def query(i):
+        return spark.range(64).filter(F.col("id") * i % 7 == i % 7).count()
+
+    query(0)
+    for i in range(1, 150):
+        query(i)
+    before = compiles.getCount()
+    query(0)
+    assert compiles.getCount() == before

@@ -68,9 +68,11 @@ def main() -> None:
                                     hard_bucket_cap=100_000)
     sections.append((
         "LSH candidate generation",
-        "band explode (16 B/row) -> bucket sizing via groupBy (map-side "
-        "partial agg, never a window over the mega-bucket) -> size-split "
-        "self-join with star candidates for hot buckets.",
+        "band explode (16 B/row) -> ONE exchange by band_key -> a window "
+        "on that partitioning sizes each bucket and finds its min doc_id "
+        "-> one co-partitioned self-join (both sides read the same "
+        "exchange) gives all-pairs for cold buckets and star pairs for "
+        "hot ones; over-cap buckets are filtered out.",
         plan(cand, "simple"),
     ))
     ids = sk.select("doc_id")
