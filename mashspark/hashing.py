@@ -54,21 +54,17 @@ def _fmix64(k: np.ndarray) -> np.ndarray:
     return k
 
 
-def murmur3_x64_128_h1(rows: np.ndarray, seed: int) -> np.ndarray:
-    """Hash each row of a (n, L) uint8 matrix; return (n,) uint64 h1 lane.
-
-    Matches ``MurmurHash3_x64_128`` (``MurmurHash3.cpp:255-332``) output
-    bytes [0:8] interpreted little-endian, i.e. Mash's ``hash_u.hash64``
-    (``hash.cpp:28-35``).
-    """
+def murmur3_x64_128_both(rows: np.ndarray, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """Both 64-bit lanes (h1, h2) of MurmurHash3_x64_128
+    (``MurmurHash3.cpp:255-332``) per row of a (n, L) uint8 matrix — used
+    as a 128-bit fingerprint (e.g. of a whole sketch) where 64 bits would
+    collide at 10^12-row scale."""
     if rows.ndim != 2 or rows.dtype != np.uint8:
         raise ValueError("rows must be a 2-D uint8 array")
     n, length = rows.shape
     nblocks = length // 16
-
     h1 = np.full(n, np.uint64(seed), dtype=np.uint64)
     h2 = h1.copy()
-
     if nblocks:
         body = np.ascontiguousarray(rows[:, : nblocks * 16])
         blocks = body.view("<u8").reshape(n, nblocks * 2)
@@ -89,7 +85,6 @@ def murmur3_x64_128_h1(rows: np.ndarray, seed: int) -> np.ndarray:
             h2 = _rotl64(h2, _U31)
             h2 += h1
             h2 = h2 * _U5 + _ADD2
-
     tail_len = length & 15
     if tail_len:
         tail = rows[:, nblocks * 16 :]
@@ -108,67 +103,6 @@ def murmur3_x64_128_h1(rows: np.ndarray, seed: int) -> np.ndarray:
         k1 = _rotl64(k1, _U31)
         k1 *= _C2
         h1 ^= k1
-
-    ulen = np.uint64(length)
-    h1 ^= ulen
-    h2 ^= ulen
-    h1 += h2
-    h2 += h1
-    h1 = _fmix64(h1)
-    h2 = _fmix64(h2)
-    h1 += h2  # out[0] = h1 after the final cross-add
-    return h1
-
-
-def murmur3_x64_128_both(rows: np.ndarray, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """Both 64-bit lanes (h1, h2) of MurmurHash3_x64_128 per row — used as
-    a 128-bit fingerprint (e.g. of a whole sketch) where 64 bits would
-    collide at 10^12-row scale. Same rounds as ``murmur3_x64_128_h1`` with
-    the final ``h2 += h1`` kept."""
-    if rows.ndim != 2 or rows.dtype != np.uint8:
-        raise ValueError("rows must be a 2-D uint8 array")
-    n, length = rows.shape
-    nblocks = length // 16
-    h1 = np.full(n, np.uint64(seed), dtype=np.uint64)
-    h2 = h1.copy()
-    if nblocks:
-        body = np.ascontiguousarray(rows[:, : nblocks * 16])
-        blocks = body.view("<u8").reshape(n, nblocks * 2)
-        for i in range(nblocks):
-            k1 = blocks[:, 2 * i].copy()
-            k2 = blocks[:, 2 * i + 1].copy()
-            k1 *= _C1
-            k1 = _rotl64(k1, _U31)
-            k1 *= _C2
-            h1 ^= k1
-            h1 = _rotl64(h1, _U27)
-            h1 += h2
-            h1 = h1 * _U5 + _ADD1
-            k2 *= _C2
-            k2 = _rotl64(k2, _U33)
-            k2 *= _C1
-            h2 ^= k2
-            h2 = _rotl64(h2, _U31)
-            h2 += h1
-            h2 = h2 * _U5 + _ADD2
-    tail_len = length & 15
-    if tail_len:
-        tail = rows[:, nblocks * 16 :]
-        if tail_len >= 9:
-            k2 = np.zeros(n, dtype=np.uint64)
-            for ti in range(tail_len, 8, -1):
-                k2 ^= tail[:, ti - 1].astype(np.uint64) << np.uint64(8 * (ti - 9))
-            k2 *= _C2
-            k2 = _rotl64(k2, _U33)
-            k2 *= _C1
-            h2 ^= k2
-        k1 = np.zeros(n, dtype=np.uint64)
-        for ti in range(min(tail_len, 8), 0, -1):
-            k1 ^= tail[:, ti - 1].astype(np.uint64) << np.uint64(8 * (ti - 1))
-        k1 *= _C1
-        k1 = _rotl64(k1, _U31)
-        k1 *= _C2
-        h1 ^= k1
     ulen = np.uint64(length)
     h1 ^= ulen
     h2 ^= ulen
@@ -179,6 +113,15 @@ def murmur3_x64_128_both(rows: np.ndarray, seed: int) -> tuple[np.ndarray, np.nd
     h1 += h2
     h2 += h1
     return h1, h2
+
+
+def murmur3_x64_128_h1(rows: np.ndarray, seed: int) -> np.ndarray:
+    """Hash each row of a (n, L) uint8 matrix; return (n,) uint64 h1 lane.
+
+    Output bytes [0:8] of ``MurmurHash3_x64_128`` interpreted
+    little-endian, i.e. Mash's ``hash_u.hash64`` (``hash.cpp:28-35``).
+    """
+    return murmur3_x64_128_both(rows, seed)[0]
 
 
 def murmur3_x64_128_h1_bytes(data: bytes, seed: int) -> int:

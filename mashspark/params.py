@@ -130,14 +130,6 @@ class LSHParams:
         if self.bands & (self.bands - 1):
             raise ValueError("bands must be a power of two")
 
-    def candidate_recall(self, j: float, s: int | None = None) -> float:
-        s = s or self.prefix
-        s = min(s, self.prefix)
-        f = 2.0 * j / (1.0 + j)
-        u = min(2 * s, int(round(s * (1.0 + (1.0 - j)))))  # approx union sketch size
-        per_band = f ** (u / self.bands)
-        return 1.0 - (1.0 - per_band) ** self.bands if per_band < 1 else 1.0
-
     def to_dict(self) -> dict:
         return asdict(self)
 

@@ -107,8 +107,7 @@ def exact_collapse(sketches: DataFrame) -> DataFrame:
 
 
 def dedup_pipeline(docs: DataFrame, config: PipelineConfig | None = None,
-                   id_col: str = "doc_id", text_col: str = "text",
-                   num_buckets: int | None = None) -> DedupResult:
+                   id_col: str = "doc_id", text_col: str = "text") -> DedupResult:
     config = config or PipelineConfig()
     sp = config.sketch
     spark = docs.sparkSession
@@ -118,16 +117,14 @@ def dedup_pipeline(docs: DataFrame, config: PipelineConfig | None = None,
     # a plain unpersist() on the returned DataFrames would silently skip
     # all of them.
     _ids0 = _persistent_rdd_ids(spark)
-    if num_buckets is None:
-        num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     # small-input parallelism guard: a tiny parquet fixture arrives as ONE
     # split, which would serialize the (CPU-heavy, map-only) sketch stage
     # onto one core. At production scale input splits >> shuffle
     # partitions and this never triggers — no shuffle is added there.
-    in_parts = docs.rdd.getNumPartitions()
-    if in_parts < num_buckets:
-        docs = docs.repartition(num_buckets)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    if docs.rdd.getNumPartitions() < n_parts:
+        docs = docs.repartition(n_parts)
 
     sketches = sketch_documents(docs, sp, config.lsh, id_col=id_col, text_col=text_col)
     # Materialize the sketch stage via localCheckpoint, NOT .persist():

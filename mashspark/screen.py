@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from .compare import binom_sf
+from .compare import pvalue_screen
 from .hashing import (decode_signed, encode_signed, hash_shingles_concat,
                       signed_sketch_bytes)
 from .minhash import kmv_set_size
@@ -88,19 +88,16 @@ def _kmv_set_size_from_hashes(exploded: DataFrame, s: int) -> int:
 
 
 def make_screen_pvalue_udf(kmer_space: float, set_size: int):
-    """screen p-value (pValueWithin, ``CommandScreen.cpp:601-615``):
-    P(X >= shared) under Binomial(denom, set_size/kmer_space), as a
-    vectorized pandas UDF over (shared, denom)."""
+    """screen p-value (``compare.pvalue_screen``): P(X >= shared) under
+    Binomial(denom, set_size/kmer_space), as a vectorized pandas UDF over
+    (shared, denom)."""
     from pyspark.sql.types import DoubleType
 
     @pandas_udf(DoubleType())
     def screen_pvalue_udf(shared: pd.Series, denom: pd.Series) -> pd.Series:
-        sh = shared.to_numpy(dtype=np.int64)
-        n = denom.to_numpy(dtype=np.int64)
-        r = float(set_size) / kmer_space
-        out = binom_sf(sh - 1, np.full(sh.shape, r), n)
-        out[sh == 0] = 1.0
-        return pd.Series(out)
+        return pd.Series(pvalue_screen(
+            shared.to_numpy(dtype=np.int64), set_size, kmer_space,
+            denom.to_numpy(dtype=np.int64)))
 
     # single-eval guard: without this the -v filter is planned between
     # two copies of the tail evaluation (see verify.make_verify_udf)
@@ -163,10 +160,8 @@ def screen(refs_sketches: DataFrame, mixture_docs: DataFrame,
     if need_pvalue:
         # KMV set size of the WHOLE mixture (CommandScreen.cpp:322) with NO
         # shuffle: per-partition bottom-s + driver merge of <= parts*s
-        # values (the same scheme as mixture_set_size, but over the
-        # already-built hash relation so custom hashes_udf kernels are
-        # honored). The former formulation kept the corpus-scale distinct-
-        # hash table alive (persist + full groupBy) just to read s values.
+        # values, over the already-built hash relation so custom
+        # hashes_udf kernels are honored.
         set_size = _kmv_set_size_from_hashes(exploded, params.s)
 
     # SCALE: semi-join the exploded hashes against the broadcast index
@@ -226,38 +221,3 @@ def screen(refs_sketches: DataFrame, mixture_docs: DataFrame,
         out = out.filter(F.col("identity") >= identity_min)
     return out
 
-
-def mixture_set_size(mixture_docs: DataFrame, params: SketchParams,
-                     text_col: str = "text") -> int:
-    """KMV distinct-shingle estimate of the whole mixture
-    (CommandScreen.cpp:322): bottom-s distinct of all shingle hashes via
-    per-partition bottom-s (mapInPandas, vectorized murmur) then a driver
-    merge of <= partitions*s values. Nothing corpus-sized is shuffled or
-    collected — the old distinct()-then-sort formulation moved EVERY
-    distinct shingle hash through a shuffle just to keep s of them.
-    """
-    k, s, seed = params.k, params.s, params.seed
-
-    def _partial(batches):
-        best = np.empty(0, dtype=np.uint64)
-        for pdf in batches:
-            texts = pdf[text_col].fillna("").astype(str).tolist()
-            bufs = [np.frombuffer(t.encode("utf-8"), dtype=np.uint8) for t in texts]
-            if not bufs:
-                continue
-            big = np.concatenate(bufs)
-            all_h = hash_shingles_concat(big, k, seed)
-            segs = [best]
-            off = 0
-            for b in bufs:
-                blen = len(b)
-                if blen >= k:  # drop the k-1 boundary-straddling windows
-                    segs.append(all_h[off : off + blen - k + 1])
-                off += blen
-            best = np.unique(np.concatenate(segs))[:s]
-        yield pd.DataFrame({"h": encode_signed(best)})
-
-    parts = mixture_docs.select(text_col).mapInPandas(_partial, schema="h long")
-    rows = parts.collect()
-    vals = decode_signed(np.array([r.h for r in rows], dtype=np.int64))
-    return kmv_set_size(np.unique(vals)[:s])

@@ -22,7 +22,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (DoubleType, IntegerType, StructField,
                                StructType)
 
-from .compare import binom_sf, capped_merge_sorted_batch
+from .compare import capped_merge_sorted_batch, pvalue_dist
 from .hashing import signed_sketch_bytes
 from .params import SketchParams, params_from_schema
 
@@ -125,21 +125,17 @@ def contain_pairs(cands: DataFrame, sketches: DataFrame,
 
 
 def make_pvalue_udf(kmer_space: float, sketch_size: int):
-    """Binomial-tail p-value (CommandDistance.cpp:427-448) as a pandas UDF
+    """Binomial-tail p-value (``compare.pvalue_dist``) as a pandas UDF
     over (common, len_a, len_b); lengths are the distinct-shingle estimates
-    (reads-mode semantics, ``Sketch.cpp:1272-1282``)."""
+    (reads-mode semantics, ``Sketch.cpp:1272-1282``), clamped to >= 1."""
 
     @pandas_udf(DoubleType())
     def pvalue_udf(common: pd.Series, len_a: pd.Series, len_b: pd.Series) -> pd.Series:
-        c = common.to_numpy(dtype=np.int64)
-        la = np.maximum(len_a.to_numpy(dtype=np.float64), 1.0)
-        lb = np.maximum(len_b.to_numpy(dtype=np.float64), 1.0)
-        px = 1.0 / (1.0 + kmer_space / la)
-        py = 1.0 / (1.0 + kmer_space / lb)
-        r = px * py / (px + py - px * py)
-        out = binom_sf(c - 1, r, np.full_like(c, sketch_size))
-        out[c == 0] = 1.0
-        return pd.Series(out)
+        return pd.Series(pvalue_dist(
+            common.to_numpy(dtype=np.int64),
+            np.maximum(len_a.to_numpy(dtype=np.float64), 1.0),
+            np.maximum(len_b.to_numpy(dtype=np.float64), 1.0),
+            kmer_space, sketch_size))
 
     # single-eval guard (a max_pvalue filter would otherwise re-run the
     # tail computation): see make_verify_udf

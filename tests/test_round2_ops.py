@@ -1,7 +1,7 @@
 """Round-2 surfaces: counts pipeline (A2/A6/A7), screen p-value +
 winner-take-all through the Spark op, containment (J6), param-compat
 enforcement (F6), sinks (S6 TSV, S7 JSON dump, S8 Phylip, S9 paste),
-bounds table, empty-edge CC, and the scale-safe mixture_set_size."""
+bounds table, empty-edge CC, and the scale-safe mixture set size."""
 
 import json
 import math
@@ -186,15 +186,17 @@ def test_screen_winner_take_all_tiebreak(spark):
 
 
 def test_mixture_set_size_matches_numpy(spark):
+    """The mixture set size ``screen(with_pvalue=True)`` uses: KMV over
+    the all-shingle hash relation, per-partition bottom-s + driver merge."""
     from mashspark.minhash import bottom_k, kmv_set_size
-    from mashspark.screen import mixture_set_size
-    from mashspark.sketch import sketch_documents  # noqa: F401
+    from mashspark.screen import _kmv_set_size_from_hashes, make_all_hashes_udf
 
     pdf_docs = [(i, f"document number {i} " + "common filler text " * 20)
                 for i in range(30)]
     d = spark.createDataFrame(pdf_docs, "doc_id long, text string").repartition(4)
-    sp = SketchParams(k=21, s=100, seed=42)
-    got = mixture_set_size(d, sp)
+    hashes = d.select(F.explode(make_all_hashes_udf(21, 42)(F.col("text")))
+                      .alias("hash"))
+    got = _kmv_set_size_from_hashes(hashes, 100)
 
     from mashspark.hashing import hash_shingles_concat
 
@@ -392,6 +394,46 @@ def test_verify_pvalue_filter_and_screen_identity_min(spark, docs):
     scr = screen(refs_sk, docs, sp)
     hi = scr.filter(F.col("identity") >= 0.99).count()
     assert screen(refs_sk, docs, sp, identity_min=0.99).count() == hi
+
+
+def test_pvalue_columns_match_compare_formulas(spark, docs):
+    """The p-value columns of ``verify_pairs`` and ``screen`` are
+    ``compare.pvalue_dist`` (lengths clamped to >= 1) and
+    ``compare.pvalue_screen`` (numpy KMV mixture set size), row by row."""
+    from mashspark.hashing import hash_shingles_concat
+    from mashspark.screen import screen
+    from mashspark.sketch import sketch_documents
+    from mashspark.verify import verify_pairs
+
+    sp = SketchParams(k=21, s=64)
+    sk = sketch_documents(docs, sp, LSHParams())
+    card = {r.doc_id: r.card_est for r in sk.select("doc_id", "card_est").collect()}
+    ids = sk.select("doc_id")
+    cands = (
+        ids.withColumnRenamed("doc_id", "id_a")
+        .crossJoin(ids.withColumnRenamed("doc_id", "id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+    rows = verify_pairs(cands, sk, sp, with_pvalue=True).collect()
+    assert {r.common == 0 for r in rows} == {True, False}
+    for r in rows:
+        want = compare.pvalue_dist(r.common, max(card[r.id_a], 1),
+                                   max(card[r.id_b], 1), sp.kmer_space, sp.s)[0]
+        assert r.p_value == pytest.approx(want, rel=1e-9, abs=1e-300), r
+
+    texts = [r.text for r in docs.collect()]
+    hashes = np.concatenate([
+        hash_shingles_concat(np.frombuffer(t.encode("utf-8"), np.uint8),
+                             sp.k, sp.seed).copy()
+        for t in texts])
+    set_size = minhash.kmv_set_size(minhash.bottom_k(hashes, sp.s))
+    refs_sk = sketch_documents(docs.limit(3), sp, LSHParams())
+    scr = screen(refs_sk, docs, sp, with_pvalue=True).collect()
+    assert scr
+    for r in scr:
+        want = compare.pvalue_screen(r.shared, set_size, sp.kmer_space,
+                                     r.denom)[0]
+        assert r.p_value == pytest.approx(want, rel=1e-9, abs=1e-300), r
 
 
 def test_params_survive_parquet_roundtrip(spark, docs, tmp_path):

@@ -4,6 +4,7 @@ the persisted sketch store, resume via stream checkpoint)."""
 
 import datetime as dt
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -161,55 +162,37 @@ def test_incremental_dedup_honours_max_distance(spark, stream_dir, tmp_path):
     assert got == {1: None, 2: None, 10: None, 11: None, 12: 2}
 
 
-def test_streaming_store_band_bucket_pruning(spark, stream_dir, tmp_path):
-    """At 10^12-doc history the per-micro-batch history scan must not be
-    a full-store scan: the band store is written PARTITIONED BY
-    pmod(band_key, n_band_buckets), and the engine filters it with the
-    batch's bucket set, so file pruning happens at planning time."""
+def test_streaming_store_is_one_sketch_table(spark, stream_dir, tmp_path,
+                                            monkeypatch):
+    """History is one table: the sketch store, bucketed by doc id. Its
+    band join explodes the stored ``band_key`` arrays and reads only
+    ``doc_id`` and ``band_key``, never the sketch bytes; no separate
+    band-key store is written."""
     import glob
 
-    from mashspark.streaming import incremental_dedup
+    from mashspark import streaming
+
+    hist_bands = []
+    real = streaming._lsh.cross_candidate_pairs
+
+    def spy(bands_a, bands_b, hard_bucket_cap):
+        hist_bands.append(bands_b)
+        return real(bands_a, bands_b, hard_bucket_cap)
+
+    monkeypatch.setattr(streaming._lsh, "cross_candidate_pairs", spy)
+    cfg = PipelineConfig(sketch=SketchParams(k=21, s=256), jaccard_threshold=0.7)
+    got = _decide(spark, tmp_path, stream_dir, cfg)
+    assert {doc: dup for (doc, _b), dup in got.items()}[10] == 1
 
     store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    cfg = PipelineConfig(sketch=SketchParams(k=21, s=256), jaccard_threshold=0.7)
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    q = incremental_dedup(stream, store, cfg, checkpoint=ckpt)
-    q.awaitTermination(600)
-
-    # layout: multiple band-bucket partitions exist on disk
-    bucket_dirs = glob.glob(os.path.join(store, "bands", "bucket=*"))
-    assert len(bucket_dirs) > 1, bucket_dirs
-
-    # a bucket filter (what process_batch issues for the batch's bucket
-    # set) is planned as a partition filter — pruned at file listing, not
-    # a post-scan row filter
-    bands = spark.read.parquet(os.path.join(store, "bands"))
-    one = bands.select("bucket").first().bucket
-    pruned = bands.filter(F.col("bucket") == one)
-    import contextlib
-    import io
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
-    scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert scan and f"bucket" in scan[0], plan
-    # and the pruned scan reads fewer files than the store holds
-    total_files = sum(
-        len(glob.glob(os.path.join(d, "*.parquet"))) for d in bucket_dirs
-    )
-    one_files = len(
-        glob.glob(os.path.join(store, "bands", f"bucket={one}", "*.parquet"))
-    )
-    assert 0 < one_files < total_files
-
-    # sketch store: partitioned by doc bucket with the same discipline
+    assert sorted(os.listdir(store)) == ["decisions", "sketches"]
     assert glob.glob(os.path.join(store, "sketches", "doc_bucket=*"))
+
+    # only the second micro-batch has history to join against
+    assert len(hist_bands) == 1
+    plan = hist_bands[0]._jdf.queryExecution().executedPlan().toString()
+    schemas = re.findall(r"ReadSchema: (struct<[^\n]*>)", plan)
+    assert schemas == ["struct<doc_id:bigint,band_key:array<bigint>>"], plan
 
 
 def test_stream_windowed_counts_matches_batch(spark, tmp_path):

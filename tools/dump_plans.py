@@ -53,7 +53,7 @@ def main() -> None:
     ))
     sections.append((
         "Sketch stage (map-only)",
-        "`sketch_documents` — one ArrowEvalPython over the scan, NO "
+        "`sketch_documents` — one MapInArrow over the scan, NO "
         "Exchange: sketching 10^12 docs is linear in executors.",
         plan(sk, "simple"),
     ))
