@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from .params import PipelineConfig
 from .sampling import hash_uniform
 from .sketch import sketch_documents
-from .verify import verify_pairs
+from .verify import _LookupSpan, all_pairs, verify_pairs
 
 
 def dedup_recall_audit(docs: DataFrame, clusters: DataFrame,
@@ -52,16 +52,11 @@ def dedup_recall_audit(docs: DataFrame, clusters: DataFrame,
         F.pmod(hash_uniform(F.col(id_col), "audit:42"),
                F.lit(sample_mod)) == 0
     ).select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    looks = _LookupSpan()
     sk = sketch_documents(sample, config.sketch, config.lsh).persist()
     try:
-        ids = sk.select("doc_id")
-        all_pairs = (
-            ids.withColumnRenamed("doc_id", "id_a")
-            .crossJoin(ids.withColumnRenamed("doc_id", "id_b"))
-            .filter(F.col("id_a") < F.col("id_b"))
-        )
         truth = verify_pairs(
-            all_pairs, sk, config.sketch,
+            all_pairs(sk, sk, upper_only=True), sk, config.sketch,
             jaccard_threshold=config.jaccard_threshold, prefix_filter=None,
         ).select("id_a", "id_b")
         ca = clusters.select(F.col("doc_id").alias("id_a"),
@@ -93,3 +88,4 @@ def dedup_recall_audit(docs: DataFrame, clusters: DataFrame,
             "recall double")
     finally:
         sk.unpersist()
+        looks.close().destroy()

@@ -49,7 +49,7 @@ from .pipeline import dedup_pipeline
 from .screen import screen
 from .session import get_spark
 from .sketch import sketch_documents, sketch_documents_with_counts
-from .verify import best_k_hits, contain_pairs, cross_dist
+from .verify import all_pairs, best_k_hits, contain_pairs, cross_dist
 
 
 def _sketch_params(args) -> SketchParams:
@@ -221,9 +221,7 @@ def cmd_contain(spark: SparkSession, args) -> int:
     # (same rule as cmd_dist; mash ignores CLI -k/-s for .msh inputs)
     params = params_from_schema(ref) or params
     qry = load_or_sketch(spark, args.query, params, lsh)
-    cands = (ref.select(F.col("doc_id").alias("id_a"))
-             .crossJoin(qry.select(F.col("doc_id").alias("id_b"))))
-    out = contain_pairs(cands, ref, params, sketches_b=qry)
+    out = contain_pairs(all_pairs(ref, qry), ref, params, sketches_b=qry)
     _emit(out, args.output)
     return 0
 

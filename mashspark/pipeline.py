@@ -45,18 +45,19 @@ class DedupResult:
     edges: DataFrame         # duplicate edges over ALL docs (src, dst)
     clusters: DataFrame      # doc_id, cluster_id (min doc_id of cluster)
     lsh_metrics: DataFrame   # bucket/skew metrics (one row)
-    # RDD ids of the localCheckpointed materializations (sketches,
-    # exact_groups, tier-1 survivors, pairs, LSH internals).
+    # what the run pinned: its localCheckpointed materializations
+    # (sketches, exact_groups, tier-1 survivors, pairs, LSH internals)
+    # and verify's sketch lookups.
     # NOTE a plain sketches.unpersist() is a SILENT NO-OP for checkpointed
     # DataFrames — the row blocks stay pinned until RDD GC or session end;
     # long-lived sessions running several pipelines must call release().
-    ckpt_rdd_ids: list = None
+    held: _Held
 
     def release(self) -> None:
         """Free every block this pipeline materialized: the
         localCheckpointed sketch, exact-group, tier-1 survivor and pair
-        blocks."""
-        _release_rdds(self.sketches.sparkSession, self.ckpt_rdd_ids)
+        blocks, and verify's sketch-lookup broadcasts."""
+        self.held.release()
 
 
 def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
@@ -64,14 +65,31 @@ def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
     return {int(k) for k in jmap.keySet().toArray()}
 
 
-def _release_rdds(spark: SparkSession, rdd_ids) -> None:
-    """Unpin the given RDDs' blocks via the JVM persistent-RDD registry,
-    the only handle Spark exposes for checkpointed blocks."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in rdd_ids or []:
-        rdd = jmap.get(rid)
-        if rdd is not None:
-            rdd.unpersist()
+class _Held:
+    """What a run pins, from ``_Held(spark)`` at its start to
+    ``since()`` at its end: the RDDs it localCheckpointed (the new ids
+    in the JVM persistent-RDD registry, the only handle Spark exposes
+    for checkpointed blocks) and the sketch lookups verify broadcast on
+    this thread meanwhile. ``release()`` frees both."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self._rdds0 = _persistent_rdd_ids(spark)
+        self.rdd_ids: list = []
+        self.span = _verify._LookupSpan()
+
+    def since(self) -> "_Held":
+        self.rdd_ids = sorted(_persistent_rdd_ids(self.spark) - self._rdds0)
+        self.span.close()
+        return self
+
+    def release(self) -> None:
+        jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
+        for rid in self.rdd_ids:
+            rdd = jmap.get(rid)
+            if rdd is not None:
+                rdd.unpersist()
+        self.span.destroy()
 
 
 def exact_collapse(sketches: DataFrame) -> DataFrame:
@@ -111,12 +129,12 @@ def dedup_pipeline(docs: DataFrame, config: PipelineConfig | None = None,
     config = config or PipelineConfig()
     sp = config.sketch
     spark = docs.sparkSession
-    # snapshot the persistent-RDD registry: every localCheckpoint created
-    # during this run (sketches, exact groups, verify tier-1 survivors,
-    # pairs) is new-in-span and gets released by DedupResult.release() —
-    # a plain unpersist() on the returned DataFrames would silently skip
-    # all of them.
-    _ids0 = _persistent_rdd_ids(spark)
+    # open the run's span: every localCheckpoint created during this run
+    # (sketches, exact groups, verify tier-1 survivors, pairs) and every
+    # sketch lookup verify broadcasts is new-in-span and gets released by
+    # DedupResult.release() — a plain unpersist() on the returned
+    # DataFrames would silently skip all of them.
+    held = _Held(spark)
 
     # small-input parallelism guard: a tiny parquet fixture arrives as ONE
     # split, which would serialize the (CPU-heavy, map-only) sketch stage
@@ -150,7 +168,7 @@ def dedup_pipeline(docs: DataFrame, config: PipelineConfig | None = None,
     # 8-core run) and overlapping partitions compute the sketch UDF
     # twice. One ordered materialization is strictly cheaper.
     sketches = sketches.localCheckpoint(eager=True)
-    return _cluster_sketches(spark, sketches, config, _ids0)
+    return _cluster_sketches(spark, sketches, config, held)
 
 
 def dedup_from_sketches(sketches: DataFrame,
@@ -165,15 +183,15 @@ def dedup_from_sketches(sketches: DataFrame,
     if emb is not None:
         config.sketch.check_compatible(emb)
     spark = sketches.sparkSession
-    _ids0 = _persistent_rdd_ids(spark)
+    held = _Held(spark)
     # same materialization rationale as dedup_pipeline: multi-consumer
     # fan-out (exact collapse + reps semi-join) over fat binary rows
     sketches = sketches.localCheckpoint(eager=True)
-    return _cluster_sketches(spark, sketches, config, _ids0)
+    return _cluster_sketches(spark, sketches, config, held)
 
 
 def _cluster_sketches(spark: SparkSession, sketches: DataFrame,
-                      config: PipelineConfig, _ids0: set) -> DedupResult:
+                      config: PipelineConfig, held: _Held) -> DedupResult:
     sp = config.sketch
     # exact_groups is consumed by reps, member edges, cluster assignment
     # and user inspection. localCheckpoint, NOT persist(): plans that read
@@ -239,7 +257,6 @@ def _cluster_sketches(spark: SparkSession, sketches: DataFrame,
         )
     )
 
-    ckpt_ids = sorted(_persistent_rdd_ids(spark) - _ids0)
     return DedupResult(
         sketches=sketches,
         exact_groups=exact_groups,
@@ -247,7 +264,7 @@ def _cluster_sketches(spark: SparkSession, sketches: DataFrame,
         edges=edges,
         clusters=clusters,
         lsh_metrics=lsh_metrics,
-        ckpt_rdd_ids=ckpt_ids,
+        held=held.since(),
     )
 
 
@@ -255,10 +272,12 @@ def _cluster_sketches(spark: SparkSession, sketches: DataFrame,
 class CrossDedupResult:
     decisions: DataFrame  # doc_id, is_dup, dup_of, jaccard (every new doc)
     metrics: DataFrame    # one row: candidate/drop accounting
-    ckpt_rdd_ids: list = None
+    held: _Held
 
     def release(self) -> None:
-        _release_rdds(self.decisions.sparkSession, self.ckpt_rdd_ids)
+        """Free the run's checkpoints and verify's sketch lookups; the
+        decisions are lazy, so read them first."""
+        self.held.release()
 
 
 def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
@@ -282,7 +301,10 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
     not the reference. A committed reference table is read in place
     (only the slice and a freshly sketched reference are checkpointed),
     and when the slice's band entries fit a broadcast the reference's
-    band entries are filtered to the slice's keys map-side.
+    band entries are filtered to the slice's keys map-side. When both
+    sketch tables fit under the broadcast cap, verify reads each one
+    once, collecting it into a lookup broadcast (``release()``
+    destroys those).
 
     Skew discipline: band keys whose candidate PRODUCT (new entries x
     ref entries) exceeds ``config.lsh.hard_bucket_cap`` are dropped,
@@ -291,7 +313,7 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
     config = config or PipelineConfig()
     sp = config.sketch
     spark = new_docs.sparkSession
-    _ids0 = _persistent_rdd_ids(spark)
+    held = _Held(spark)
 
     # the slice's sketches feed the key probe, the band join and verify;
     # eager for the multi-consumer checkpoint-race reason of dedup_pipeline.
@@ -351,7 +373,7 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
     return CrossDedupResult(
         decisions=decisions,
         metrics=metrics,
-        ckpt_rdd_ids=sorted(_persistent_rdd_ids(spark) - _ids0),
+        held=held.since(),
     )
 
 

@@ -14,11 +14,12 @@ Spark-first composition:
   against itself (in-batch dups) and, through ``dedup_against``'s capped
   cross band join, against the persisted sketch store (history),
   Mash-exact verified (history pairs against the history's own sketch
-  rows, in place), and appended to the store; its checkpoints are
-  released per batch. The store is bucketed parquet (Iceberg-shaped,
-  like io.py); restarts resume from the stream checkpoint and the
-  already-appended store — the same at-least-once + idempotent-append
-  discipline the batch manifests use.
+  rows, in place), and appended to the store; its checkpoints and
+  verify's sketch lookups are released per batch. The store is
+  bucketed parquet (Iceberg-shaped, like io.py); restarts resume from
+  the stream checkpoint and the already-appended store — the same
+  at-least-once + idempotent-append discipline the batch manifests
+  use.
 
 State sizing at web scale: history is never re-sketched (its band keys
 ride in the stored sketch rows, 8 B x <=32/doc), the batch side of the
@@ -138,7 +139,7 @@ class IncrementalDeduper:
         """The foreachBatch callback (also callable directly in tests)."""
         cfg = self.config
         spark = batch_df.sparkSession
-        ids0 = _pipeline._persistent_rdd_ids(spark)
+        held = _pipeline._Held(spark)
         try:
             # eager: the sketches feed both joins, both verifies and the
             # append (the checkpoint-race reason of pipeline.dedup_pipeline)
@@ -170,8 +171,11 @@ class IncrementalDeduper:
                         "band_key", F.col("doc_id").alias("id_b")),
                     cfg.lsh.hard_bucket_cap,
                 )
-                # a re-crawled doc keeps its id: never its own partner
-                cross = cross.filter(F.col("id_a") != F.col("id_b"))
+                # a re-crawled doc keeps its id: never its own partner.
+                # Checkpointed: the doc-bucket collect and verify both
+                # read it, and would each run the band join again.
+                cross = cross.filter(
+                    F.col("id_a") != F.col("id_b")).localCheckpoint(eager=True)
                 # the history sketches, bucket-pruned on the doc_id
                 # partitioning of the store to the band-matched ids
                 doc_buckets = [
@@ -199,8 +203,7 @@ class IncrementalDeduper:
                 F.pmod(F.col("doc_id"), F.lit(self.n_doc_buckets)).cast("int"),
             ).write.partitionBy("doc_bucket").mode("append").parquet(self.sketch_path)
         finally:
-            _pipeline._release_rdds(
-                spark, _pipeline._persistent_rdd_ids(spark) - ids0)
+            held.since().release()
 
 
 def incremental_dedup(stream_df: DataFrame, store_path: str,

@@ -8,19 +8,37 @@ cheap filters run as JVM column expressions (whole-stage codegen), and the
 expensive binomial p-value is only computed for pairs that survive
 (reference computes distance filter before p-value too:
 ``CommandDistance.cpp:409-417``).
+
+The sketches reach the merge by one of two paths, picked from the sketch
+tables' exact row counts:
+
+* lookup, when every table's rows x 8·s bytes fits
+  ``spark.sql.autoBroadcastJoinThreshold``: each table is collected once
+  and broadcast to the Python workers as sorted ids, offsets and one flat
+  hash array (``_sketch_lookups``), and one ``mapInArrow`` pass over the
+  skinny (id_a, id_b) pairs looks both sketches up and merges them batch
+  by batch (``_lookup_pass``), the way ``mash dist`` compares sketches
+  already in memory (``CommandDistance.cpp:336-385``). No sketch byte
+  crosses a JVM join or a shuffle, and no per-row ``bytes`` is built;
+* shuffled, for a table over the cap (or broadcasting disabled): the
+  sketches attach to the pairs through shuffled-hash joins
+  (``_attach_sketches``) and a pandas UDF merges them.
 """
 
 from __future__ import annotations
 
 import math
+import threading
+import weakref
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (DoubleType, IntegerType, StructField,
-                               StructType)
+from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                               StructField, StructType)
 
 from .compare import capped_merge_sorted_batch, pvalue_dist
 from .hashing import signed_sketch_bytes
@@ -60,36 +78,43 @@ def make_verify_udf(sketch_size: int):
     return verify_udf.asNondeterministic()
 
 
-def make_contain_udf():
-    """(sketch_ref, sketch_query) -> struct(common, used) per
-    ``containSketches`` (CommandContain.cpp:231-263)."""
-    fields = StructType(
-        [StructField("common", IntegerType(), False),
-         StructField("used", IntegerType(), False)]
-    )
+_CONTAIN_FIELDS = StructType(
+    [StructField("common", IntegerType(), False),
+     StructField("used", IntegerType(), False)]
+)
 
-    @pandas_udf(fields)
+
+def _contain_counts(refs: list, qrys: list):
+    """(common, used) int32 arrays of ``containSketches``
+    (CommandContain.cpp:231-263) over signed-encoded sketch views, one
+    batch at a time. Per contain_sketches: used = min(min(|ref|,|query|),
+    |{q : q <= max(ref)}|) (the views are order-preserving) and common =
+    the shared count over ref vs query[:used], which is exactly the
+    batch merge with an uncapped sketch size."""
+    n = len(refs)
+    used = np.zeros(n, dtype=np.int32)
+    trimmed = []
+    for i in range(n):
+        r, q = refs[i], qrys[i]
+        if len(r) == 0 or len(q) == 0:
+            trimmed.append(q[:0])
+            continue
+        u = min(min(len(r), len(q)),
+                int(np.searchsorted(q, r[-1], side="right")))
+        used[i] = u
+        trimmed.append(q[:u])
+    common, _denom = capped_merge_sorted_batch(refs, trimmed, 1 << 30)
+    return common, used
+
+
+def make_contain_udf():
+    """(sketch_ref, sketch_query) -> struct(common, used), the shuffled
+    path's form of ``_contain_counts``."""
+
+    @pandas_udf(_CONTAIN_FIELDS)
     def contain_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        # Same batch vectorization as verify_udf. Per contain_sketches:
-        # used = min(min(|ref|,|query|), |{q : q <= max(ref)}|) — computed
-        # on signed-encoded views (order-preserving) — and common = the
-        # shared count over ref vs query[:used], which is exactly the
-        # batch merge with an uncapped sketch size.
-        refs = [signed_sketch_bytes(buf) for buf in a]
-        qrys = [signed_sketch_bytes(buf) for buf in b]
-        n = len(refs)
-        used = np.zeros(n, dtype=np.int32)
-        trimmed = []
-        for i in range(n):
-            r, q = refs[i], qrys[i]
-            if len(r) == 0 or len(q) == 0:
-                trimmed.append(q[:0])
-                continue
-            u = min(min(len(r), len(q)),
-                    int(np.searchsorted(q, r[-1], side="right")))
-            used[i] = u
-            trimmed.append(q[:u])
-        common, _denom = capped_merge_sorted_batch(refs, trimmed, 1 << 30)
+        common, used = _contain_counts([signed_sketch_bytes(buf) for buf in a],
+                                       [signed_sketch_bytes(buf) for buf in b])
         return pd.DataFrame({"common": common, "used": used})
 
     # single-eval guard: see make_verify_udf
@@ -107,19 +132,26 @@ def contain_pairs(cands: DataFrame, sketches: DataFrame,
     (``CommandContain.cpp:258-262``).
 
     ``id_a`` takes its sketch from ``sketches`` and ``id_b`` from
-    ``sketches_b`` (default: ``sketches``) through the same two-table
-    attach as ``verify_pairs``, so a reference and a query table whose
-    ids overlap are compared in place, never unioned."""
-    df = _attach_sketches(cands, sketches, sketches_b, params)
-    cu = make_contain_udf()
-    df = df.withColumn("_c", cu(F.col("sketch_a"), F.col("sketch_b")))
+    ``sketches_b`` (default: ``sketches``) by the same lookup or
+    shuffled path as ``verify_pairs``, so a reference and a query table
+    whose ids overlap are compared in place, never unioned."""
+    sk_a, sk_b = _sketch_tables(sketches, sketches_b, params)
+    looks = _sketch_lookups(sk_a, sk_b, params.s)
+    if looks is not None:
+        df = _lookup_pass(cands, looks, _contain_score,
+                          _CONTAIN_FIELDS.fields)
+    else:
+        cu = make_contain_udf()
+        df = _attach_sketches(cands, sk_a, sk_b).withColumn(
+            "_c", cu(F.col("sketch_a"), F.col("sketch_b"))).select(
+            "id_a", "id_b",
+            F.col("_c.common").alias("common"),
+            F.col("_c.used").alias("used"))
     return df.select(
-        "id_a", "id_b",
-        F.col("_c.common").alias("common"),
-        F.col("_c.used").alias("used"),
-        F.when(F.col("_c.used") > 0, F.col("_c.common") / F.col("_c.used"))
+        "id_a", "id_b", "common", "used",
+        F.when(F.col("used") > 0, F.col("common") / F.col("used"))
         .otherwise(F.lit(0.0)).alias("containment"),
-        F.when(F.col("_c.used") > 0, 1.0 / F.sqrt(F.col("_c.used")))
+        F.when(F.col("used") > 0, 1.0 / F.sqrt(F.col("used")))
         .otherwise(F.lit(1.0)).alias("error"),
     )
 
@@ -152,23 +184,6 @@ def _broadcast_threshold(spark) -> int:
                .autoBroadcastJoinThreshold())
 
 
-def _sketch_side_small(sk: DataFrame) -> bool:
-    """True when the optimizer's size estimate for the sketch relation
-    is under the broadcast threshold. The estimate is not the table's
-    bytes: a parquet scan estimates from its compressed file sizes, and
-    on Spark 4.1.2 a ``localCheckpoint`` keeps its origin plan's
-    estimate, which follows the input text, not the 8·s-byte sketch rows
-    (crawl-dense's checkpointed sketch table: 279 KB estimated for
-    18.65 MB), so tables far above the threshold can qualify."""
-    try:
-        est = int(sk._jdf.queryExecution().optimizedPlan().stats()
-                  .sizeInBytes())  # py4j converts the scala BigInt to int
-    except Exception:  # stats introspection is best-effort only
-        return False
-    thr = _broadcast_threshold(sk.sparkSession)
-    return 0 < thr and 0 <= est < thr
-
-
 def collect_at_most(df: DataFrame, cap: int):
     """``df``'s rows as a pandas frame if there are at most ``cap`` > 0,
     else None: one collect of at most ``cap + 1`` rows (the limit(n+1)
@@ -178,6 +193,186 @@ def collect_at_most(df: DataFrame, cap: int):
         return None
     head = df.limit(cap + 1).toPandas()
     return head if len(head) <= cap else None
+
+
+def _sketch_tables(sketches: DataFrame, sketches_b: DataFrame | None,
+                   params: SketchParams) -> tuple[DataFrame, DataFrame]:
+    """The (doc_id, sketch, card_est) projections that ``id_a`` and
+    ``id_b`` take their sketches from: ``sketches`` and ``sketches_b``
+    (default: ``sketches``, returned as the same object), so two corpora
+    whose id spaces overlap are compared in place: no id remap, no union.
+    Both tables must match ``params`` (F6, Sketch.cpp:133-160)."""
+    if sketches_b is None:
+        sketches_b = sketches
+    for t in (sketches, sketches_b):
+        embedded = params_from_schema(t)
+        if embedded is not None:  # refuse mismatched tables (F6, Sketch.cpp:133-160)
+            params.check_compatible(embedded)
+    sk_a = sketches.select("doc_id", "sketch", "card_est")
+    if sketches_b is sketches:
+        return sk_a, sk_a
+    return sk_a, sketches_b.select("doc_id", "sketch", "card_est")
+
+
+# Lookup broadcasts outlive verify_pairs (its output is lazy). Each one
+# is handed to every open ``_LookupSpan`` of the thread that made it (a
+# run's span, whose owner destroys what it collected), and nothing else
+# here keeps it: a lookup no span owns is reclaimed with its plan by
+# Spark's ContextCleaner, like a JVM broadcast join's table.
+_spans = threading.local()
+
+
+def _open_spans() -> weakref.WeakSet:
+    if not hasattr(_spans, "open"):
+        _spans.open = weakref.WeakSet()
+    return _spans.open
+
+
+class _LookupSpan:
+    """The lookup broadcasts verify makes on this thread between this
+    span's creation and ``close()``; ``destroy()`` frees them on the
+    driver and the executors."""
+
+    def __init__(self):
+        self.lookups: list = []
+        _open_spans().add(self)
+
+    def close(self) -> "_LookupSpan":
+        _open_spans().discard(self)
+        return self
+
+    def destroy(self) -> None:
+        for bc in self.lookups:
+            if bc._jbroadcast.isValid():  # an enclosing span may own it too
+                bc.destroy()
+
+
+def _sketch_lookups(sk_a: DataFrame, sk_b: DataFrame, s: int):
+    """The two sketch tables as lookup broadcasts (``_broadcast_lookup``),
+    or None when broadcasting is disabled or a table's exact row count x
+    8·s bytes (an upper bound on its sketch bytes) exceeds
+    ``autoBroadcastJoinThreshold``. A table passed for both sides is
+    counted, collected and broadcast once.
+
+    The size comes from ``count()``: its exchange carries one partial
+    count per partition. ``collect_at_most``'s limit(n+1) probe would
+    instead plan a single-partition exchange of every row it collects.
+
+    The trade-off: the gate and the collect cover the whole table, not
+    just the ids that occur in the pairs. A small slice verified against
+    a reference near the cap (``pipeline.dedup_against``, or a streaming
+    micro-batch against the history buckets it touches) pays for the
+    reference's sketch column once per run, up to the cap, where the
+    shuffled path moved the candidates' 1 KB prefixes plus the survivors'
+    sketches."""
+    thr = _broadcast_threshold(sk_a.sparkSession)
+    tables = [sk_a] if sk_b is sk_a else [sk_a, sk_b]
+    if thr <= 0 or any(t.count() * 8 * s > thr for t in tables):
+        return None
+    looks = [_broadcast_lookup(t) for t in tables]
+    return looks[0], looks[-1]
+
+
+def _broadcast_lookup(sk: DataFrame):
+    """Collect a (doc_id, sketch, card_est) table once and broadcast it
+    to the Python workers as (ids, offsets, hashes, card): ids ascending
+    (a repeated id keeps each of its rows), row i's signed-encoded hashes
+    at ``hashes[offsets[i]:offsets[i + 1]]`` in one flat int64 array."""
+    pdf = sk.toPandas()
+    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+    order = np.argsort(ids, kind="stable")
+    blobs = [pdf["sketch"].iat[i] or b"" for i in order]
+    offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) // 8 for b in blobs], out=offsets[1:])
+    hashes = np.frombuffer(b"".join(blobs), dtype="<i8")
+    card = pdf["card_est"].to_numpy(dtype=np.int64)[order]
+    bc = sk.sparkSession.sparkContext.broadcast(
+        (ids[order], offsets, hashes, card))
+    for span in list(_open_spans()):
+        span.lookups.append(bc)
+    return bc
+
+
+def _match(batch: pa.RecordBatch, look_a, look_b):
+    """The inner join of a batch of (id_a, id_b) pairs with the two
+    lookups, as (pair row, look_a row, look_b row) index arrays: one
+    triple per matching pair of sketch rows, as the attach joins emit
+    them, so a pair whose id is missing from its table yields none and
+    an id repeated in a table yields one per row."""
+    def rows(look, col):
+        keys = col.to_numpy()
+        lo = np.searchsorted(look[0], keys, "left")
+        return lo, np.searchsorted(look[0], keys, "right") - lo
+
+    lo_a, n_a = rows(look_a, batch.column(0))
+    lo_b, n_b = rows(look_b, batch.column(1))
+    k = n_a * n_b
+    pair = np.repeat(np.arange(len(k)), k)
+    j = np.arange(len(pair)) - np.repeat(np.cumsum(k) - k, k)
+    n_b = n_b[pair]
+    return pair, lo_a[pair] + j // n_b, lo_b[pair] + j % n_b
+
+
+def _sketches(look, rows: np.ndarray, m: int | None = None) -> list:
+    """Zero-copy views of the given lookup rows' sketches, cut to the
+    bottom ``m`` hashes when ``m`` is set."""
+    _ids, offsets, hashes, _card = look
+    lo = offsets[rows]
+    hi = offsets[rows + 1]
+    if m is not None:
+        hi = np.minimum(lo + m, hi)
+    return [hashes[a:b] for a, b in zip(lo.tolist(), hi.tolist())]
+
+
+def _lookup_pass(cands: DataFrame, looks, score, fields: list) -> DataFrame:
+    """(id_a, id_b, *fields) from one ``mapInArrow`` pass over the
+    skinny pairs: every batch is matched against the two lookup
+    broadcasts (``_match``) and ``score(look_a, look_b, pair, row_a,
+    row_b)`` returns the pair rows it keeps and their ``fields``
+    columns."""
+    bc_a, bc_b = looks
+
+    def gen(batches):
+        look_a, look_b = bc_a.value, bc_b.value
+        for batch in batches:
+            pair, cols = score(look_a, look_b, *_match(batch, look_a, look_b))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(pair), batch.column(1).take(pair)]
+                + [pa.array(c) for c in cols],
+                names=["id_a", "id_b"] + [f.name for f in fields])
+
+    pairs = cands.select("id_a", "id_b").dropna()
+    return pairs.mapInArrow(gen, StructType(pairs.schema.fields + list(fields)))
+
+
+_VERIFY_FIELDS = [StructField("card_a", LongType(), False),
+                  StructField("card_b", LongType(), False),
+                  StructField("common", IntegerType(), False),
+                  StructField("denom", IntegerType(), False)]
+
+
+def _verify_score(s: int, prefix: tuple[int, float] | None):
+    """The lookup pass's verify: with ``prefix=(m, floor)``, tier 1 keeps
+    the pairs whose bottom-m prefix merge gives common / max(denom, 1) >=
+    floor, then the full-s merge scores the batch's survivors."""
+    def score(look_a, look_b, pair, ra, rb):
+        if prefix is not None:
+            m, floor = prefix
+            c, d = capped_merge_sorted_batch(
+                _sketches(look_a, ra, m), _sketches(look_b, rb, m), m)
+            keep = c / np.maximum(d, 1) >= floor
+            pair, ra, rb = pair[keep], ra[keep], rb[keep]
+        common, denom = capped_merge_sorted_batch(
+            _sketches(look_a, ra), _sketches(look_b, rb), s)
+        return pair, [look_a[3][ra], look_b[3][rb], common, denom]
+
+    return score
+
+
+def _contain_score(look_a, look_b, pair, ra, rb):
+    """The lookup pass's containment: ``_contain_counts`` of every pair."""
+    return pair, list(_contain_counts(_sketches(look_a, ra),
+                                      _sketches(look_b, rb)))
 
 
 def _survivor_sketches(cands: DataFrame, *tables: DataFrame) -> list[DataFrame]:
@@ -209,24 +404,12 @@ def _survivor_sketches(cands: DataFrame, *tables: DataFrame) -> list[DataFrame]:
 
 
 def _attach(cands: DataFrame, sk: DataFrame, id_col: str, suffix: str,
-            payload_col, small: bool = False) -> DataFrame:
+            payload_col) -> DataFrame:
     side = sk.select(
         F.col("doc_id").alias(id_col),
         payload_col.alias(f"sketch_{suffix}"),
         F.col("card_est").alias(f"card_{suffix}"),
     )
-    if small:
-        # sketch side estimated small (see _sketch_side_small): broadcast
-        # it so the fat ATTACHED intermediate is never exchanged — the
-        # two sequential shuffle-hash attaches otherwise move
-        # |pairs| x 8 KB rows through the id_b exchange (measured on the
-        # q7 ground-truth stage, 125k exhaustive pairs over a 492-doc
-        # table: 2.2-3.1 s -> 1.5-2.1 s, identical output). Callers
-        # repartition the skinny pair relation first so the merge UDF
-        # still runs at full slot parallelism (a crossJoin/filter output
-        # otherwise inherits the tiny left side's partitioning — the
-        # round-2 4-wide-UDF pathology this hint originally fixed).
-        return cands.join(F.broadcast(side), id_col)
     # shuffle_hash, build side = the skinny pair relation: without the
     # hint AQE broadcasts the (fat, semi-joined) SKETCH side onto the
     # pair relation, so the downstream Arrow-UDF stage inherits the pair
@@ -236,49 +419,24 @@ def _attach(cands: DataFrame, sk: DataFrame, id_col: str, suffix: str,
     # serially built 2x ~300 MB broadcasts). The shuffled-hash join lands
     # both sides on the configured shuffle width, the UDF runs at full
     # slot parallelism, and no fat-row sort or driver broadcast happens.
-    # This path runs whenever a side's size estimate reaches the
-    # broadcast threshold; the estimate can undershoot the sketch bytes
-    # by far (see _sketch_side_small).
     return cands.hint("shuffle_hash").join(side, id_col)
 
 
-def _attach_sketches(cands: DataFrame, sketches: DataFrame,
-                     sketches_b: DataFrame | None, params: SketchParams,
+def _attach_sketches(cands: DataFrame, sk_a: DataFrame, sk_b: DataFrame,
                      prefix: tuple[int, float] | None = None) -> DataFrame:
-    """(id_a, id_b) pairs -> (id_a, id_b, sketch_a, card_a, sketch_b,
-    card_b), the one attach behind ``verify_pairs``, ``contain_pairs``
-    and ``cross_dist``. ``id_a`` takes its sketch from ``sketches`` and
-    ``id_b`` from ``sketches_b`` (default: ``sketches``), so two corpora
-    whose id spaces overlap are compared in place: no id remap, no union.
-    Both tables must match ``params`` (F6, Sketch.cpp:133-160).
+    """The shuffled path, for sketch tables over the lookup cap: (id_a,
+    id_b) pairs -> (id_a, id_b, sketch_a, card_a, sketch_b, card_b),
+    ``id_a``'s sketch from ``sk_a`` and ``id_b``'s from ``sk_b`` (see
+    ``_sketch_tables``), attached by two shuffled-hash joins.
 
     ``prefix=(m, floor)`` is verify's tier 1: attach only the bottom-m
     prefix of each sketch, keep the pairs whose prefix Jaccard is >=
     ``floor``, restrict both tables to those survivors' ids
     (``_survivor_sketches``), then attach full sketches to them.
     """
-    if sketches_b is None:
-        sketches_b = sketches
-    for t in (sketches, sketches_b):
-        embedded = params_from_schema(t)
-        if embedded is not None:  # refuse mismatched tables (F6, Sketch.cpp:133-160)
-            params.check_compatible(embedded)
-    sk_a = sk_b = sketches.select("doc_id", "sketch", "card_est")
-    small_a = small_b = _sketch_side_small(sk_a)
-    if sketches_b is not sketches:
-        sk_b = sketches_b.select("doc_id", "sketch", "card_est")
-        small_b = _sketch_side_small(sk_b)
-    if small_a and small_b:
-        # broadcast-attach path: the pair relation often arrives with
-        # the partitioning of a tiny crossJoin side — spread it so the
-        # merge UDF runs at full slot width (explicit N: AQE does not
-        # re-coalesce a user-numbered repartition)
-        cands = cands.repartition(int(sk_a.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions")))
-
     def attach(pairs: DataFrame, a: DataFrame, b: DataFrame, payload) -> DataFrame:
-        pairs = _attach(pairs, a, "id_a", "a", payload, small=small_a)
-        return _attach(pairs, b, "id_b", "b", payload, small=small_b)
+        pairs = _attach(pairs, a, "id_a", "a", payload)
+        return _attach(pairs, b, "id_b", "b", payload)
 
     if prefix is not None:
         m, floor = prefix
@@ -326,21 +484,24 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
     candidate-pair DataFrame (id_a, id_b).
 
     ``id_a`` takes its sketch from ``sketches`` and ``id_b`` from
-    ``sketches_b`` (default: ``sketches``) through ``_attach_sketches``,
-    so cross pairs between two corpora (a new slice vs a committed
-    reference, whose id spaces may overlap) verify against both tables
-    in place.
+    ``sketches_b`` (default: ``sketches``), so cross pairs between two
+    corpora (a new slice vs a committed reference, whose id spaces may
+    overlap) verify against both tables in place. Tables under the
+    broadcast cap are looked up in one Python pass over the pairs; a
+    table over it makes both attach through shuffled joins (module
+    docstring).
 
     Two-tier verification when ``jaccard_threshold`` and ``prefix_filter``
-    are set: tier 1 joins only the bottom-``prefix_filter`` prefix of each
-    sketch (1 KB instead of 8 KB per side at m=128) and drops pairs whose
-    prefix-Jaccard estimate is below ``threshold - margin``; tier 2 runs
-    the full-s Mash-exact merge on the survivors. The prefix estimate
+    are set: tier 1 merges only the bottom-``prefix_filter`` prefix of
+    each sketch (on the shuffled path, 1 KB instead of 8 KB per side at
+    m=128 crosses the joins) and drops pairs whose prefix-Jaccard
+    estimate is below ``threshold - margin``; tier 2 runs the full-s
+    Mash-exact merge on the survivors. The prefix estimate
     over m hashes has sd ~ sqrt(j(1-j)/m), and the margin is
     max(0.15, 6 sd): 6 sd = 0.243 at the default t=0.7, m=128, so
     borderline true pairs are essentially never pre-filtered
     (P < 1e-9/pair) while boilerplate-only candidate junk (j ~ 0.0-0.3)
-    dies at 1/8 of the shuffle cost. The FINAL numbers are always the
+    dies at 1/8 of the merge cost. The FINAL numbers are always the
     full-s exact ones (precision is never affected).
 
     The cheap jaccard threshold runs before the p-value UDF
@@ -352,14 +513,19 @@ def verify_pairs(cands: DataFrame, sketches: DataFrame, params: SketchParams,
         t = float(jaccard_threshold)
         sigma = math.sqrt(max(t * (1.0 - t), 0.05) / float(prefix_filter))
         prefix = (int(prefix_filter), t - max(_PREFIX_MARGIN, 6.0 * sigma))
-    df = _attach_sketches(cands, sketches, sketches_b, params, prefix=prefix)
-    vu = make_verify_udf(params.s)
-    df = df.withColumn("_v", vu(F.col("sketch_a"), F.col("sketch_b")))
-    df = df.select(
-        "id_a", "id_b", "card_a", "card_b",
-        F.col("_v.common").alias("common"),
-        F.col("_v.denom").alias("denom"),
-    )
+    sk_a, sk_b = _sketch_tables(sketches, sketches_b, params)
+    looks = _sketch_lookups(sk_a, sk_b, params.s)
+    if looks is not None:
+        df = _lookup_pass(cands, looks, _verify_score(params.s, prefix),
+                          _VERIFY_FIELDS)
+    else:
+        vu = make_verify_udf(params.s)
+        df = _attach_sketches(cands, sk_a, sk_b, prefix=prefix).withColumn(
+            "_v", vu(F.col("sketch_a"), F.col("sketch_b"))).select(
+            "id_a", "id_b", "card_a", "card_b",
+            F.col("_v.common").alias("common"),
+            F.col("_v.denom").alias("denom"),
+        )
     df = df.withColumn(
         "jaccard",
         F.when(F.col("denom") > 0, F.col("common") / F.col("denom")).otherwise(F.lit(0.0)),
@@ -406,22 +572,39 @@ def cross_dist(ref_sketches: DataFrame, query_sketches: DataFrame,
     skinny rows — fine distributed); at web scale the near-duplicate
     path is ``lsh.candidate_pairs`` + ``verify_pairs``, which never
     enumerates non-colliding pairs. The pair relation here is two 8-byte
-    ids; ``verify_pairs`` then attaches ``id_a``'s sketch from
+    ids; ``verify_pairs`` then takes ``id_a``'s sketch from
     ``ref_sketches`` and ``id_b``'s from ``query_sketches`` and scores
     every pair, so no fat row ever enters the cross product.
 
     ``upper_only=True`` keeps id_a < id_b (triangle). Param compat is
     enforced against both tables' embedded params (Sketch.cpp:133-160).
     """
+    return verify_pairs(all_pairs(ref_sketches, query_sketches, upper_only),
+                        ref_sketches, params, max_distance=max_distance,
+                        max_pvalue=max_pvalue, with_pvalue=with_pvalue,
+                        sketches_b=query_sketches)
+
+
+def all_pairs(ref: DataFrame, query: DataFrame,
+              upper_only: bool = False) -> DataFrame:
+    """Every (id_a, id_b) pair of a ``ref`` doc id and a ``query`` doc id
+    (``upper_only``: only id_a < id_b), the pair relation of the
+    exhaustive ops (``cross_dist``, ``mash contain``, the recall audit's
+    ground truth).
+
+    A cross product keeps its streamed side's partitioning, often one
+    file split, so it is spread over ``spark.sql.shuffle.partitions``
+    tasks and the merge that scores it runs on every slot (284 docs from
+    one split, 40k pairs, 4 cores: 1.74 -> 1.30 s). An explicit N: AQE
+    does not re-coalesce a user-numbered repartition."""
     cands = (
-        ref_sketches.select(F.col("doc_id").alias("id_a"))
-        .crossJoin(query_sketches.select(F.col("doc_id").alias("id_b")))
+        ref.select(F.col("doc_id").alias("id_a"))
+        .crossJoin(query.select(F.col("doc_id").alias("id_b")))
     )
     if upper_only:
         cands = cands.filter(F.col("id_a") < F.col("id_b"))
-    return verify_pairs(cands, ref_sketches, params, max_distance=max_distance,
-                        max_pvalue=max_pvalue, with_pvalue=with_pvalue,
-                        sketches_b=query_sketches)
+    return cands.repartition(int(ref.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions")))
 
 
 def best_k_hits(pairs: DataFrame, b: int, query_col: str = "id_b",

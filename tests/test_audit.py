@@ -63,3 +63,21 @@ def test_sampling_is_deterministic_and_partitioning_invariant(spark, cfg):
     # no true pairs in a dup-free sample -> vacuous recall 1.0
     assert a["true_pairs"] == 0 and a["recall"] == 1.0
     res.release()
+
+
+def test_repeated_audits_leave_no_live_lookup(spark, cfg):
+    """The audit's ground truth looks its sample's sketches up from a
+    broadcast, and destroys it before returning: repeated audits in one
+    session do not pile up live broadcasts."""
+    from mashspark import verify as V
+
+    docs = _corpus(spark)
+    singletons = docs.select("doc_id", F.col("doc_id").alias("cluster_id"))
+    seen = V._LookupSpan()
+    for _ in range(3):
+        row = dedup_recall_audit(docs, singletons, cfg,
+                                 sample_mod=1).collect()[0]
+        assert row["true_pairs"] >= 6
+    seen.close()
+    assert len(seen.lookups) == 3
+    assert not any(bc._jbroadcast.isValid() for bc in seen.lookups)

@@ -208,72 +208,148 @@ def _all_pairs(sk):
             .filter(F.col("id_a") < F.col("id_b")))
 
 
-def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path):
-    """Round-6: verify_pairs broadcasts the sketch side when its size
-    ESTIMATE is under the broadcast threshold (parquet scans estimate
-    from file sizes; a localCheckpoint keeps its origin plan's estimate,
-    which can be far below its sketch bytes). Pin output equality
-    between the two attach strategies on a parquet-backed table, and
-    that the small path actually fires there."""
-    from mashspark.sketch import sketch_documents
+def _lookup_spy(monkeypatch):
+    """Record whether each verify/contain call took the lookup path."""
     from mashspark import verify as V
 
-    docs = _near_dup_docs(spark)
-    sp, lp = SketchParams(s=128), LSHParams(prefix=64)
-    path = str(tmp_path / "sk.parquet")
-    sketch_documents(docs, sp, lp).write.parquet(path)
-    sk = spark.read.parquet(path).select("doc_id", "sketch", "card_est")
-    assert V._sketch_side_small(sk), "parquet-backed small table must qualify"
+    took = []
+    lookups = V._sketch_lookups
 
-    pairs = _all_pairs(sk)
-    got = V.verify_pairs(pairs, sk, sp, jaccard_threshold=0.5,
-                         prefix_filter=None).orderBy("id_a", "id_b").collect()
-    # force the hint path for the same inputs
-    orig = V._sketch_side_small
-    V._sketch_side_small = lambda _sk: False
-    try:
-        ref = V.verify_pairs(pairs, sk, sp, jaccard_threshold=0.5,
-                             prefix_filter=None).orderBy("id_a", "id_b").collect()
-    finally:
-        V._sketch_side_small = orig
-    assert [tuple(r) for r in got] == [tuple(r) for r in ref]
-    assert len(got) > 0
+    def spy(*args):
+        looks = lookups(*args)
+        took.append(looks is not None)
+        return looks
+
+    monkeypatch.setattr(V, "_sketch_lookups", spy)
+    return took
+
+
+def test_verify_broadcast_attach_matches_hint_path(spark, tmp_path,
+                                                   monkeypatch):
+    """verify_pairs and contain_pairs look sketches up from broadcasts
+    when both tables fit under the broadcast threshold, and attach them
+    through shuffled-hash joins otherwise (threshold -1). Both paths must
+    return the same rows, on parquet-backed and on checkpointed tables,
+    with the prefix tier on and off, over two tables whose id spaces
+    overlap, with an id repeated in ``sketches_b`` (one row per sketch
+    row, as the join emits), ids missing from either table (the pair is
+    dropped) and docs too short to sketch."""
+    from mashspark import verify as V
+    from mashspark.sketch import sketch_documents
+
+    sp, lp = SketchParams(s=128), LSHParams(prefix=64)
+    docs_a = _near_dup_docs(spark).unionByName(spark.createDataFrame(
+        [(500, "tiny"), (501, "")], "doc_id long, text string"))
+    texts = {r.doc_id: r.text for r in docs_a.collect()}
+    # b reuses a's ids for other texts: id 3 holds doc 1000's text twice
+    # over (a repeated id), id 4 a short doc, ids 0-2 near copies of a's
+    # docs 1000, 1003 and 1006
+    rows_b = [(0, texts[1000]), (1, texts[1003] + " more"), (2, texts[1006]),
+              (3, texts[1000]), (3, texts[9] + " tail"), (4, "short"),
+              (7, texts[1009])]
+    docs_b = spark.createDataFrame(rows_b, "doc_id long, text string")
+    sk_a = sketch_documents(docs_a, sp, lp)
+    sk_b = sketch_documents(docs_b, sp, lp)
+    ids_a = [r for r in texts] + [9999]   # 9999: missing from a
+    ids_b = sorted({r[0] for r in rows_b}) + [8888]
+    pairs = spark.createDataFrame([(a, b) for a in ids_a for b in ids_b],
+                                  "id_a long, id_b long")
+    for name in ("a", "b"):
+        sketch_documents({"a": docs_a, "b": docs_b}[name], sp, lp) \
+            .write.parquet(str(tmp_path / name))
+    tables = {
+        "parquet": (spark.read.parquet(str(tmp_path / "a")),
+                    spark.read.parquet(str(tmp_path / "b"))),
+        "checkpoint": (sk_a.localCheckpoint(eager=True),
+                       sk_b.localCheckpoint(eager=True)),
+    }
+
+    def runs(a, b):
+        yield "verify", V.verify_pairs(pairs, a, sp, with_pvalue=True,
+                                       prefix_filter=None, sketches_b=b)
+        yield "verify+prefix", V.verify_pairs(
+            pairs, a, sp, jaccard_threshold=0.5, prefix_filter=64,
+            sketches_b=b)
+        yield "contain", V.contain_pairs(pairs, a, sp, sketches_b=b)
+
+    took = _lookup_spy(monkeypatch)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    for kind, (a, b) in tables.items():
+        got = {name: sorted(tuple(r) for r in out.collect())
+               for name, out in runs(a, b)}
+        spark.conf.set(key, "-1")
+        try:
+            ref = {name: sorted(tuple(r) for r in out.collect())
+                   for name, out in runs(a, b)}
+        finally:
+            spark.conf.set(key, prev)
+        assert took == [True] * 3 + [False] * 3, (kind, took)
+        took.clear()
+        for name in got:
+            assert got[name] == ref[name], (kind, name)
+        all_pairs = got["verify"]
+        # one row per (a row, b row): id 3 twice, missing ids never
+        assert len(all_pairs) == (len(ids_a) - 1) * (len(rows_b)), kind
+        assert not {r[0] for r in all_pairs} & {9999}
+        assert not {r[1] for r in all_pairs} & {8888}
+        assert sum(r[:2] == (1000, 3) for r in all_pairs) == 2
+        # empty sketches score as maximally distant, never as matches
+        assert all(r[5] == 1.0 for r in all_pairs if r[0] in (500, 501))
+        assert (1000, 0) in {r[:2] for r in got["verify+prefix"]}
+        assert len(got["contain"]) == len(all_pairs)
 
 
 def test_broadcast_threshold_parses_byte_strings(spark, tmp_path):
     """autoBroadcastJoinThreshold accepts byte strings; conf.get hands
     them back verbatim ("10MB"), so the threshold must come from Spark's
-    parsed value — int() of the raw string raised, and the small-side
-    check silently took the slow attach path."""
+    parsed value — int() of the raw string raised. The lookup gate is
+    exact: a table whose rows x 8·s bytes equals the threshold is looked
+    up, one byte less is not, and -1 disables the lookup."""
     from mashspark import verify as V
     from mashspark.sketch import sketch_documents
 
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
+    sp = SketchParams(s=64)
     docs = spark.createDataFrame(
         [(i, f"document {i} " + "shared boilerplate words " * 20) for i in range(8)],
         "doc_id long, text string")
     path = str(tmp_path / "sk.parquet")
-    sketch_documents(docs, SketchParams(s=64), LSHParams(prefix=32)).write.parquet(path)
+    sketch_documents(docs, sp, LSHParams(prefix=32)).write.parquet(path)
     sk = spark.read.parquet(path).select("doc_id", "sketch", "card_est")
-    spark.conf.set(key, "10MB")
+
+    def looked_up() -> bool:
+        span = V._LookupSpan()
+        looks = V._sketch_lookups(sk, sk, sp.s)
+        span.close().destroy()
+        # one table for both sides: broadcast once, destroyed with the span
+        assert len(span.lookups) == (looks is not None)
+        assert not any(bc._jbroadcast.isValid() for bc in span.lookups)
+        return looks is not None
+
     try:
+        spark.conf.set(key, "10MB")
         assert spark.conf.get(key) == "10MB"
         assert V._broadcast_threshold(spark) == 10 * 1024 * 1024
-        assert V._sketch_side_small(sk)
+        assert looked_up()
+        spark.conf.set(key, str(8 * 8 * sp.s))
+        assert looked_up()
+        spark.conf.set(key, str(8 * 8 * sp.s - 1))
+        assert not looked_up()
         spark.conf.set(key, "-1")
         assert V._broadcast_threshold(spark) == -1
-        assert not V._sketch_side_small(sk)
+        assert not looked_up()
     finally:
         spark.conf.set(key, prev)
 
 
-def test_verify_survivor_paths_match(spark):
-    """verify_pairs with the prefix tier restricts the sketch table to
-    tier-1 survivor ids either by a map-side semi-join against the
-    collected ids (they fit under the broadcast cap) or by a shuffled
-    semi-join (broadcasting disabled). Both must return identical
-    pairs."""
+def test_verify_survivor_paths_match(spark, monkeypatch):
+    """verify_pairs with the prefix tier on a sketch table over the
+    lookup cap restricts the table to tier-1 survivor ids either by a
+    map-side semi-join against the collected ids (they fit under the
+    broadcast cap) or by a shuffled semi-join (broadcasting disabled).
+    Both must return the pairs the lookup path returns."""
     from mashspark import verify as V
     from mashspark.sketch import sketch_documents
 
@@ -282,23 +358,119 @@ def test_verify_survivor_paths_match(spark):
     sk = sketch_documents(_near_dup_docs(spark), sp,
                           LSHParams(prefix=64)).localCheckpoint(eager=True)
     pairs = _all_pairs(sk)
+    n_docs = sk.count()
 
     def run():
         out = V.verify_pairs(pairs, sk, sp, jaccard_threshold=0.5, prefix_filter=64)
         return [tuple(r) for r in out.orderBy("id_a", "id_b").collect()], out
 
+    took = _lookup_spy(monkeypatch)
+    probes = []
+    collect = V.collect_at_most
+    monkeypatch.setattr(V, "collect_at_most", lambda df, cap: probes.append(
+        collect(df, cap)) or probes[-1])
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
-    got, _ = run()
-    spark.conf.set(key, "-1")
+    looked, _ = run()
+    # the table (n_docs x 1 KB) is over the cap, its survivor ids are not
+    spark.conf.set(key, str(n_docs * 8 * sp.s // 4))
     try:
+        got, _ = run()
+        spark.conf.set(key, "-1")
         ref, out = run()
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert re.search(r"ShuffledHashJoin .*LeftSemi", plan), plan
     finally:
         spark.conf.set(key, prev)
-    assert got == ref
+    assert took == [True, False, False]
+    assert [p is not None for p in probes] == [True, False]
+    assert got == ref == looked
     assert len(got) > 0
+
+
+def test_release_destroys_verify_lookups(spark, tmp_path):
+    """verify's lookup broadcasts outlive verify_pairs (its output is
+    lazy), and the run's release path destroys them: DedupResult and
+    CrossDedupResult.release() and the streaming deduper's per-batch
+    sweep. Five dedup_against runs in one session leave no live lookup
+    behind."""
+    from mashspark import verify as V
+    from mashspark.pipeline import dedup_against
+    from mashspark.streaming import IncrementalDeduper
+
+    cfg = PipelineConfig(sketch=SketchParams(k=21, s=64))
+    docs = _near_dup_docs(spark)
+    # an enclosing span sees every lookup made below
+    seen = V._LookupSpan()
+
+    def live() -> int:
+        return sum(bc._jbroadcast.isValid() for bc in seen.lookups)
+
+    res = dedup_pipeline(docs, cfg)
+    bcs = res.held.span.lookups
+    assert len(bcs) == 1  # one table, looked up for both sides
+    assert all(bc._jbroadcast.isValid() for bc in bcs)
+    res.release()
+    assert not any(bc._jbroadcast.isValid() for bc in bcs)
+    assert live() == 0
+
+    new = docs.filter(F.col("doc_id") >= 1000)
+    ref = docs.filter(F.col("doc_id") < 1000)
+    for _ in range(5):
+        res = dedup_against(new, ref, cfg)
+        dup_of = {r.doc_id: r.dup_of for r in res.decisions.collect()}
+        bcs = res.held.span.lookups
+        res.release()
+        assert dup_of[1000] == 0 and len(bcs) == 2
+        assert not any(bc._jbroadcast.isValid() for bc in bcs)
+    assert len(seen.lookups) == 11 and live() == 0
+
+    dd = IncrementalDeduper(str(tmp_path / "store"), cfg)
+    for batch_id, batch in enumerate((ref, new)):
+        dd.process_batch(batch, batch_id)
+        assert live() == 0
+    assert len(seen.lookups) > 11  # the batches did look sketches up
+    seen.close()
+
+
+def test_unowned_lookups_are_left_to_spark(spark, monkeypatch):
+    """Outside a run's span verify keeps no reference to its lookup
+    broadcasts, so Spark's ContextCleaner reclaims them with their plan;
+    the plan still runs once the driver's Python object is gone."""
+    import gc
+    import weakref
+
+    from mashspark import verify as V
+    from mashspark.sketch import sketch_documents
+
+    sp = SketchParams(s=64)
+    sk = sketch_documents(_near_dup_docs(spark), sp,
+                          LSHParams(prefix=32)).localCheckpoint(eager=True)
+    pairs = _all_pairs(sk)
+    made = []
+    lookup = V._broadcast_lookup
+
+    def spy(t):
+        bc = lookup(t)
+        made.append(weakref.ref(bc))
+        return bc
+
+    monkeypatch.setattr(V, "_broadcast_lookup", spy)
+    out = V.verify_pairs(pairs, sk, sp, jaccard_threshold=0.5,
+                         prefix_filter=None)
+    gc.collect()
+    assert len(made) == 1 and made[0]() is None
+    got = sorted(tuple(r) for r in out.collect())
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        ref = sorted(tuple(r) for r in V.verify_pairs(
+            pairs, sk, sp, jaccard_threshold=0.5,
+            prefix_filter=None).collect())
+    finally:
+        spark.conf.set(key, prev)
+    assert got == ref and len(got) > 0
 
 
 def test_exact_groups_one_row_per_sketch(spark):

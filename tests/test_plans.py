@@ -12,8 +12,10 @@ Each assertion names the scale behavior it guards:
   bucket-size shuffle);
 * the screen hash join broadcasts the reference index (mixture side must
   stream map-side, never shuffle on hash);
-* verify's fat-sketch joins hash, not sort-merge (8 KB binary rows must
-  not be sorted).
+* verify looks sketch tables under the broadcast cap up in one
+  MapInArrow pass, so no shuffle carries a sketch; over the cap its
+  fat-sketch joins hash, not sort-merge (8 KB binary rows must not be
+  sorted).
 """
 
 from __future__ import annotations
@@ -169,26 +171,36 @@ def _executed_nodes(df):
 
 
 def test_verify_survivor_sketches_never_shuffled(spark, docs_parquet):
-    """With the prefix tier on and a tier-1 survivor-id set under the
-    broadcast cap, verify restricts the checkpointed sketch table by a
-    map-side semi-join against the collected ids: no shuffle exchange in
-    the executed plan may carry a sketch column (the shuffled semi-join
-    moved the whole table through an exchange to compare a subset)."""
+    """With the prefix tier on and a checkpointed sketch table under the
+    broadcast cap, verify looks the sketches up from a broadcast of the
+    table: no shuffle exchange in the executed plan may carry a sketch
+    column (the attach joins' exchanges moved the table to compare a
+    subset). Its size gate and collect write less than 8·s bytes of
+    shuffle in all, read from the status store: a limit(n+1) collect
+    of a table with several partitions plans a single-partition exchange
+    of every sketch row."""
     from mashspark.verify import verify_pairs
 
     docs = spark.read.parquet(docs_parquet)
-    sk = sketch_documents(docs, PARAMS, LSH).localCheckpoint(eager=True)
+    sk = sketch_documents(docs, PARAMS, LSH).repartition(4).localCheckpoint(
+        eager=True)
     ids = sk.select("doc_id")
     cands = (
         ids.withColumnRenamed("doc_id", "id_a")
         .crossJoin(ids.withColumnRenamed("doc_id", "id_b"))
         .filter(F.col("id_a") < F.col("id_b"))
     )
-    out = verify_pairs(cands, sk, PARAMS, jaccard_threshold=0.5,
-                       prefix_filter=16)
+    outs = []
+    gate = _stage_shuffle_writes(spark, lambda: outs.append(verify_pairs(
+        cands, sk, PARAMS, jaccard_threshold=0.5, prefix_filter=16)),
+        "shuffleWriteBytes")
+    assert sum(gate) < 8 * PARAMS.s, gate
+    out = outs[0]
     assert out.collect()  # executes `out`'s own plan: AQE finalizes it
+    nodes = _executed_nodes(out)
+    assert any(n.nodeName() == "MapInArrow" for n in nodes)
     fat = []
-    for node in _executed_nodes(out):
+    for node in nodes:
         if node.nodeName() != "Exchange":  # shuffle; broadcasts are "BroadcastExchange"
             continue
         o = node.output()
@@ -250,9 +262,11 @@ def _duplicated_udf_calls(plan: str) -> dict:
 def test_no_duplicated_udf_evaluation(spark, docs_parquet, monkeypatch):
     """Single-eval audit over every operator whose plan chains a python
     UDF into a derived-column filter: each UDF invocation signature must
-    appear in exactly one eval node. verify's tier 1 runs inside the
-    survivor checkpoint, so the plan of every frame verify checkpoints is
-    audited too."""
+    appear in exactly one eval node. verify and contain are audited on
+    both sketch paths: the shuffled one (threshold -1), whose tier 1
+    runs inside the survivor checkpoint, so the plan of every frame
+    verify checkpoints is audited too; and the lookup one, which merges
+    in exactly one MapInArrow node."""
     from mashspark.screen import screen
     from mashspark.substring import substring_dup_spans
     from mashspark.verify import contain_pairs, verify_pairs
@@ -275,20 +289,38 @@ def test_no_duplicated_udf_evaluation(spark, docs_parquet, monkeypatch):
         checkpointed.append(plan_of(df))
         return local_checkpoint(df, *args, **kwargs)
 
+    def sketch_plans():
+        return {
+            "verify+pvalue": plan_of(verify_pairs(
+                cands, sk, PARAMS, jaccard_threshold=0.5, max_pvalue=1e-5,
+                prefix_filter=None)),
+            "verify+prefix": plan_of(verify_pairs(
+                cands, sk, PARAMS, jaccard_threshold=0.5, prefix_filter=16)),
+            "contain": plan_of(contain_pairs(cands, sk, PARAMS)),
+        }
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
     with monkeypatch.context() as m:
         m.setattr(type(cands), "localCheckpoint", spy)
-        verify_prefix = plan_of(verify_pairs(
-            cands, sk, PARAMS, jaccard_threshold=0.5, prefix_filter=16))
+        lookup = sketch_plans()
+        assert not checkpointed, "the lookup path checkpointed a frame"
+        spark.conf.set(key, "-1")
+        try:
+            shuffled = sketch_plans()
+        finally:
+            spark.conf.set(key, prev)
+    # one MapInArrow on top of the sketch stages that build `cands`
+    n_cands = plan_of(cands).count("MapInArrow (")
+    for name, p in lookup.items():
+        assert p.count("MapInArrow (") == n_cands + 1, (name, p)
     assert any("EvalPython" in p for p in checkpointed), \
         "verify+prefix checkpointed no tier-1 plan"
     plans = {
-        "verify+pvalue": plan_of(verify_pairs(
-            cands, sk, PARAMS, jaccard_threshold=0.5, max_pvalue=1e-5,
-            prefix_filter=None)),
-        "verify+prefix": verify_prefix,
+        **{f"{name} (lookup)": p for name, p in lookup.items()},
+        **{f"{name} (shuffled)": p for name, p in shuffled.items()},
         **{f"verify+prefix checkpoint {i}": p
            for i, p in enumerate(checkpointed)},
-        "contain": plan_of(contain_pairs(cands, sk, PARAMS)),
         "screen": plan_of(screen(
             sketch_documents(docs.filter(F.col("doc_id") < 20), PARAMS, LSH),
             docs, PARAMS, max_pvalue=1e-5, identity_min=0.8)),
@@ -397,10 +429,12 @@ def test_pq_search_blocked_no_driver_queries(spark):
 
 
 
-def _stage_shuffle_writes(spark, action) -> list[int]:
-    """Shuffle records written by each completed stage of the jobs that
-    ``action`` runs, read from the status store: a stage that ran counts
-    even where AQE later prunes its branch from the final plan."""
+def _stage_shuffle_writes(spark, action,
+                          metric: str = "shuffleWriteRecords") -> list[int]:
+    """Shuffle records (or another stage metric) written by each
+    completed stage of the jobs that ``action`` runs, read from the
+    status store: a stage that ran counts even where AQE later prunes
+    its branch from the final plan."""
     sc = spark.sparkContext._jsc.sc()
 
     def jobs():
@@ -413,7 +447,7 @@ def _stage_shuffle_writes(spark, action) -> list[int]:
     stage_ids = {ids.apply(k) for j in jobs() if j.jobId() not in before
                  for ids in [j.stageIds()] for k in range(ids.size())}
     stages = [sc.statusStore().lastStageAttempt(sid) for sid in stage_ids]
-    return [st.shuffleWriteRecords() for st in stages
+    return [getattr(st, metric)() for st in stages
             if str(st.status()) == "COMPLETE"]
 
 
