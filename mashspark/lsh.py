@@ -235,14 +235,34 @@ def cross_candidate_pairs(bands_a: DataFrame, bands_b: DataFrame,
     the band join of ``pipeline.dedup_against`` and of the streaming
     deduper's history check, so no within-side pair is ever generated.
 
-    When side a's entries fit a broadcast (16 B each, one
-    ``collect_at_most`` probe), side b is semi-joined against its keys
-    map-side; otherwise both sides' bucket sizes are shuffled. Band keys
-    whose candidate PRODUCT ``A*B`` exceeds ``hard_bucket_cap`` are
-    dropped and counted (drops are visible, never silent); a dropped key
-    has entries on both sides, so the semi-join leaves the dropped set
-    and the metrics unchanged.
+    Band keys whose candidate PRODUCT ``A*B`` exceeds ``hard_bucket_cap``
+    are dropped and counted (drops are visible, never silent). Two paths
+    find them:
+
+    * **Join size first.** When side a's entries fit a broadcast (16 B
+      each, one ``collect_at_most`` probe), the driver counts them per
+      key, and one inner join of side b against a broadcast of those
+      counts gives the band join's exact size ``sum(A*B)`` as a global
+      sum: a partial sum per partition and a one-row exchange, no
+      per-key exchange. Every key's product is at most that total, so
+      a total within the cap proves that nothing is dropped: the pairs
+      come straight from the join, and the metrics row is a literal
+      zero.
+    * **Exact bucket sizes.** When the total exceeds the cap, side b's
+      entries are counted per key (side b is semi-joined to side a's
+      keys map-side first), and the hot set is the keys whose product
+      exceeds the cap. When side a's keys do not fit a broadcast, both
+      sides' bucket sizes are shuffled. A dropped key has entries on
+      both sides, so the semi-join leaves the dropped set and the
+      metrics unchanged.
+
+    The size path is still needed at scale: once the join is larger
+    than the cap, only the per-key sizes tell which buckets to drop, and
+    at web scale the slice's keys no longer fit a broadcast.
     """
+    def distinct_pairs(a, b):
+        return a.join(b, "band_key").select("id_a", "id_b").distinct()
+
     spark = bands_a.sparkSession
     keys = _verify.collect_at_most(
         bands_a.select("band_key"), _verify._broadcast_threshold(spark) // 16)
@@ -252,6 +272,18 @@ def cross_candidate_pairs(bands_a: DataFrame, bands_b: DataFrame,
         sz_n = F.broadcast(spark.createDataFrame(
             keys.groupby("band_key").size().reset_index(name="n_new"),
             "band_key long, n_new long"))
+        # the band join's size, summed in double for the product
+        # compare's ANSI-overflow reason below; the inner join keeps
+        # side b's entries under side a's keys, as the semi-join does
+        joined = bands_b.join(sz_n, "band_key")
+        total = joined.agg(F.sum(F.col("n_new").cast("double"))).first()[0]
+        if (total or 0.0) <= int(hard_bucket_cap):
+            pairs = distinct_pairs(bands_a, joined.select("band_key", "id_b"))
+            # a literal row (an inline table: no Spark job to read it)
+            # with the hot-set aggregates' types: never-NULL longs
+            return pairs, spark.sql(
+                "SELECT * FROM VALUES (0L, 0L, 0L) AS t(n_dropped_buckets, "
+                "n_dropped_new_entries, n_dropped_ref_entries)")
         bands_b = bands_b.join(sz_n.select("band_key"), "band_key", "left_semi")
     else:
         sz_n = bands_a.groupBy("band_key").agg(F.count("*").alias("n_new"))
@@ -274,11 +306,7 @@ def cross_candidate_pairs(bands_a: DataFrame, bands_b: DataFrame,
         F.coalesce(F.sum("n_new"), F.lit(0)).alias("n_dropped_new_entries"),
         F.coalesce(F.sum("n_ref"), F.lit(0)).alias("n_dropped_ref_entries"),
     )
-    bands_a = bands_a.join(hot.select("band_key"), "band_key", "left_anti")
-    bands_b = bands_b.join(hot.select("band_key"), "band_key", "left_anti")
-    pairs = (
-        bands_a.join(bands_b, "band_key")
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    pairs = distinct_pairs(
+        bands_a.join(hot.select("band_key"), "band_key", "left_anti"),
+        bands_b.join(hot.select("band_key"), "band_key", "left_anti"))
     return pairs, metrics

@@ -299,12 +299,15 @@ def dedup_against(new_docs: DataFrame, ref_docs: DataFrame,
 
     Cost model: per-run shuffle and materialization follow the slice,
     not the reference. A committed reference table is read in place
-    (only the slice and a freshly sketched reference are checkpointed),
-    and when the slice's band entries fit a broadcast the reference's
-    band entries are filtered to the slice's keys map-side. When both
-    sketch tables fit under the broadcast cap, verify reads each one
-    once, collecting it into a lookup broadcast (``release()``
-    destroys those).
+    (only the slice and a freshly sketched reference are checkpointed).
+    When the slice's band entries fit a broadcast, the reference's band
+    entries are joined to the slice's per-key counts map-side, and the
+    band join's exact size comes out of that join as one global sum;
+    while it is within ``hard_bucket_cap`` no reference bucket is sized
+    at all, so the band stage shuffles one partial sum per partition.
+    When both sketch tables fit under the broadcast cap, verify counts
+    them in one aggregate and reads each one once, collecting it into a
+    lookup broadcast (``release()`` destroys those).
 
     Skew discipline: band keys whose candidate PRODUCT (new entries x
     ref entries) exceeds ``config.lsh.hard_bucket_cap`` are dropped,

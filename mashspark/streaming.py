@@ -23,13 +23,16 @@ Spark-first composition:
 
 State sizing at web scale: history is never re-sketched (its band keys
 ride in the stored sketch rows, 8 B x <=32/doc), the batch side of the
-history join is small so its band keys are broadcast (one
-``collect_at_most`` probe) and the history side is filtered to them
-map-side with NO shuffle, and nothing driver-side grows with history
-size. The history is ONE table, ``store/sketches``, written
-``partitionBy(doc_bucket = pmod(doc_id, n_doc_buckets))`` and read twice
-per batch, the way ``pipeline.dedup_against`` reads a committed
-reference:
+history join is small so its per-key band counts are broadcast (one
+``collect_at_most`` probe) and the history side is joined to them
+map-side with NO per-key shuffle: the join's total size, one global
+sum, shows that no bucket reaches ``hard_bucket_cap``, and only a
+total above it sizes the history's buckets. Nothing driver-side grows
+with history size. The history is ONE table, ``store/sketches``,
+written ``partitionBy(doc_bucket = pmod(doc_id, n_doc_buckets))`` and
+read twice per batch, the way ``pipeline.dedup_against`` reads a
+committed reference; its parquet schema is inferred once per deduper
+and then handed to the reader:
 
 * the band join explodes its ``band_key`` arrays; the scan reads only
   ``doc_id`` and ``band_key``, never the 8 KB sketch bytes. It scans
@@ -128,12 +131,21 @@ class IncrementalDeduper:
         self.sketch_path = os.path.join(store_path, "sketches")
         self.decisions_path = os.path.join(store_path, "decisions")
         self.n_doc_buckets = n_doc_buckets
+        self._schema = None  # the store's, once a read has inferred it
 
     def _history(self, spark: SparkSession):
+        """The store, or None before its first append. Its schema is
+        inferred once (one Spark job) and then passed to the reader;
+        the inferred schema keeps the ``sketch`` column's params
+        metadata, so later reads still carry it for the F6 check."""
         try:
-            return spark.read.parquet(self.sketch_path)
+            if self._schema is not None:
+                return spark.read.schema(self._schema).parquet(self.sketch_path)
+            hist = spark.read.parquet(self.sketch_path)
         except Exception:
             return None
+        self._schema = hist.schema
+        return hist
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """The foreachBatch callback (also callable directly in tests)."""

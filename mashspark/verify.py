@@ -254,8 +254,9 @@ def _sketch_lookups(sk_a: DataFrame, sk_b: DataFrame, s: int):
     ``autoBroadcastJoinThreshold``. A table passed for both sides is
     counted, collected and broadcast once.
 
-    The size comes from ``count()``: its exchange carries one partial
-    count per partition. ``collect_at_most``'s limit(n+1) probe would
+    The size comes from ``count()`` (for two tables, one sum over their
+    tagged union): its exchange carries one partial count per
+    partition. ``collect_at_most``'s limit(n+1) probe would
     instead plan a single-partition exchange of every row it collects.
 
     The trade-off: the gate and the collect cover the whole table, not
@@ -266,8 +267,19 @@ def _sketch_lookups(sk_a: DataFrame, sk_b: DataFrame, s: int):
     shuffled path moved the candidates' 1 KB prefixes plus the survivors'
     sketches."""
     thr = _broadcast_threshold(sk_a.sparkSession)
-    tables = [sk_a] if sk_b is sk_a else [sk_a, sk_b]
-    if thr <= 0 or any(t.count() * 8 * s > thr for t in tables):
+    if thr <= 0:
+        return None
+    if sk_b is sk_a:
+        tables, counts = [sk_a], [sk_a.count()]
+    else:
+        # both counts from one aggregate over the tagged union: one
+        # job's partial sums, where two count()s run two
+        tagged = sk_a.select(F.lit(1).alias("a"), F.lit(0).alias("b")).union(
+            sk_b.select(F.lit(0).alias("a"), F.lit(1).alias("b")))
+        row = tagged.agg(F.coalesce(F.sum("a"), F.lit(0)),
+                         F.coalesce(F.sum("b"), F.lit(0))).first()
+        tables, counts = [sk_a, sk_b], list(row)
+    if any(n * 8 * s > thr for n in counts):
         return None
     looks = [_broadcast_lookup(t) for t in tables]
     return looks[0], looks[-1]

@@ -107,3 +107,74 @@ def test_buckets_over_hard_cap_are_dropped_under_star_cap(spark):
     assert metrics["n_dropped_buckets"] == shared
     assert metrics["n_dropped_docs"] == 2 * shared
     assert _run(sk, 1000, 2)[0] == {(1, 2)}
+
+
+def _cross_brute_force(new, ref, hard_bucket_cap):
+    """The cross band join of (band_key, id) entries in plain Python:
+    every key whose product of side sizes exceeds the cap is dropped and
+    counted; every other key pairs each new id with each ref id."""
+    by_new, by_ref = defaultdict(list), defaultdict(list)
+    for key, doc in new:
+        by_new[key].append(doc)
+    for key, doc in ref:
+        by_ref[key].append(doc)
+    pairs, dropped = set(), []
+    for key in by_new.keys() & by_ref.keys():
+        a, b = by_new[key], by_ref[key]
+        if len(a) * len(b) > hard_bucket_cap:
+            dropped.append((len(a), len(b)))
+        else:
+            pairs.update((i, j) for i in a for j in b)
+    metrics = {
+        "n_dropped_buckets": len(dropped),
+        "n_dropped_new_entries": sum(a for a, _ in dropped),
+        "n_dropped_ref_entries": sum(b for _, b in dropped),
+    }
+    return pairs, metrics
+
+
+def test_cross_candidate_pairs_fast_path_matches_brute_force(spark):
+    """``cross_candidate_pairs`` on ``dedup_against``'s inputs (a slice of
+    reference copies plus unrelated pages, against the reference) gives
+    the brute-force pairs and drop metrics at every cap. A cap at or
+    above the band join's total size takes the join-size path, whose
+    metrics row is a literal zero; one below it sizes every bucket. The
+    metrics row has the same columns and types on both paths."""
+    from pyspark.sql import functions as F
+
+    from mashspark.lsh import cross_candidate_pairs
+    from mashspark.params import LSHParams, SketchParams
+    from mashspark.sketch import sketch_documents
+    from mashspark.webtext import webtext_spark_df
+
+    sp, lp = SketchParams(k=21, s=256, seed=42), LSHParams(bands=32, prefix=64)
+    ref = webtext_spark_df(spark, n_base=30, seed=1).select("doc_id", "text")
+    new = (ref.filter(F.col("doc_id") % 3 == 0)
+           .select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+           .unionByName(webtext_spark_df(spark, n_base=5, seed=99)
+                        .select("doc_id", "text")))
+    bands_a = explode_bands(sketch_documents(new, sp, lp)).select(
+        "band_key", F.col("doc_id").alias("id_a")).localCheckpoint(eager=True)
+    bands_b = explode_bands(sketch_documents(ref, sp, lp)).select(
+        "band_key", F.col("doc_id").alias("id_b")).localCheckpoint(eager=True)
+    new_e = [tuple(r) for r in bands_a.collect()]
+    ref_e = [tuple(r) for r in bands_b.collect()]
+    n_new = defaultdict(int)
+    for key, _ in new_e:
+        n_new[key] += 1
+    total = sum(n_new[key] for key, _ in ref_e)
+    assert total > 0
+
+    schemas = set()
+    for cap, fast in ((total - 1, False), (total, True), (total + 1, True),
+                      (2, False), (LSHParams().hard_bucket_cap, True)):
+        want_pairs, want_metrics = _cross_brute_force(new_e, ref_e, cap)
+        pairs, metrics = cross_candidate_pairs(bands_a, bands_b, cap)
+        assert {tuple(r) for r in pairs.collect()} == want_pairs, cap
+        assert metrics.first().asDict() == want_metrics, cap
+        plan = metrics._jdf.queryExecution().executedPlan().toString()
+        assert ("LocalTableScan" in plan) == fast, (cap, plan)
+        schemas.add(tuple((f.name, f.dataType.simpleString(), f.nullable)
+                          for f in metrics.schema.fields))
+    assert len(schemas) == 1, schemas
+    assert _cross_brute_force(new_e, ref_e, 2)[1]["n_dropped_buckets"] > 0

@@ -435,6 +435,12 @@ def _stage_shuffle_writes(spark, action,
     completed stage of the jobs that ``action`` runs, read from the
     status store: a stage that ran counts even where AQE later prunes
     its branch from the final plan."""
+    return [getattr(st, metric)() for st in _action_stages(spark, action)]
+
+
+def _action_stages(spark, action) -> list:
+    """The status store's last attempt of every completed stage of the
+    jobs that ``action`` runs."""
     sc = spark.sparkContext._jsc.sc()
 
     def jobs():
@@ -447,8 +453,7 @@ def _stage_shuffle_writes(spark, action,
     stage_ids = {ids.apply(k) for j in jobs() if j.jobId() not in before
                  for ids in [j.stageIds()] for k in range(ids.size())}
     stages = [sc.statusStore().lastStageAttempt(sid) for sid in stage_ids]
-    return [getattr(st, metric)() for st in stages
-            if str(st.status()) == "COMPLETE"]
+    return [st for st in stages if str(st.status()) == "COMPLETE"]
 
 
 def test_lsh_band_entries_cross_one_exchange(spark):
@@ -471,3 +476,38 @@ def test_lsh_band_entries_cross_one_exchange(spark):
     writes = _stage_shuffle_writes(spark, lambda: got.extend(pairs.collect()))
     assert len(got) == 10
     assert sum(w >= 2000 * 16 // 2 for w in writes) == 1, writes
+
+
+def test_cross_band_join_sizes_without_per_key_exchange(spark):
+    """When the band join of a small slice against a reference is within
+    ``hard_bucket_cap``, ``cross_candidate_pairs`` proves it from the
+    join's total size, a global sum: its jobs write under 1 KB of shuffle
+    in all, and no stage writes more than one record per task (a per-key
+    count exchange of the reference's entries writes one per key)."""
+    import random
+
+    from mashspark.lsh import cross_candidate_pairs
+
+    rng = random.Random(17)
+    ref = [(d, [rng.getrandbits(62) for _ in range(16)]) for d in range(2000)]
+    # ten slice docs: five copies of reference docs, five unrelated
+    new = [(10_000 + d, ref[d * 7][1]) for d in range(5)] + [
+        (20_000 + d, [rng.getrandbits(62) for _ in range(16)])
+        for d in range(5)]
+    bands_a = spark.createDataFrame(
+        [(k, d) for d, keys in new for k in keys],
+        "band_key long, id_a long").coalesce(1)
+    bands_b = spark.createDataFrame(
+        [(k, d) for d, keys in ref for k in keys],
+        "band_key long, id_b long").repartition(4).localCheckpoint(eager=True)
+    out = []
+    stages = _action_stages(spark, lambda: out.append(cross_candidate_pairs(
+        bands_a, bands_b, LSHParams().hard_bucket_cap)))
+    assert sum(st.shuffleWriteBytes() for st in stages) < 1024
+    per_key = [(st.name(), st.numTasks(), st.shuffleWriteRecords())
+               for st in stages if st.shuffleWriteRecords() > st.numTasks()]
+    assert not per_key, per_key
+    pairs, metrics = out[0]
+    assert {tuple(r) for r in pairs.collect()} == {
+        (10_000 + d, d * 7) for d in range(5)}
+    assert tuple(metrics.first()) == (0, 0, 0)

@@ -258,3 +258,55 @@ def test_stream_exact_dedup(spark, stream_dir):
     # doc 12 (exact copy of doc 2's text, later batch) is dropped by the
     # cross-batch streaming state; everything else survives
     assert ids == [1, 2, 10, 11]
+
+
+def test_incremental_dedup_infers_store_schema_once(spark, tmp_path):
+    """The store's parquet schema is inferred by the first read that
+    finds it, one Spark job, and then passed to the reader with its
+    params metadata: from the third micro-batch on, each batch runs one
+    job fewer than a deduper that re-infers it, with the same
+    decisions."""
+    from mashspark.params import params_from_schema
+    from mashspark.streaming import IncrementalDeduper
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def last_job():
+        # an id, not a count: the status store keeps only the most
+        # recent spark.ui.retainedJobs jobs
+        sc.listenerBus().waitUntilEmpty()
+        js = sc.statusStore().jobsList(None)
+        return max((js.apply(i).jobId() for i in range(js.size())), default=-1)
+
+    batches = [
+        [_doc(1, BASE + "alpha section one"), _doc(2, OTHER)],
+        [_doc(10, (BASE + "alpha section one").replace("steady", "stable")),
+         _doc(11, "completely different text " * 20)],
+        [_doc(12, OTHER), _doc(13, "gamma delta epsilon zeta " * 25)],
+        [_doc(14, "gamma delta epsilon zeta " * 25),
+         _doc(15, "fresh words for a page of its own " * 12)],
+    ]
+    cfg = PipelineConfig(sketch=SketchParams(k=21, s=256), jaccard_threshold=0.7)
+
+    def run(name, reinfer):
+        dd = IncrementalDeduper(str(tmp_path / name), cfg)
+        jobs = []
+        for batch_id, rows in enumerate(batches):
+            if reinfer:
+                dd._schema = None
+            df = spark.createDataFrame(pd.DataFrame(rows)).select(
+                "doc_id", "text")
+            before = last_job()
+            dd.process_batch(df, batch_id)
+            jobs.append(last_job() - before)
+        hist = dd._history(spark)
+        assert params_from_schema(hist) == cfg.sketch
+        dec = spark.read.parquet(dd.decisions_path)
+        return jobs, {(r.doc_id, r.batch_id): r.dup_of for r in dec.collect()}
+
+    jobs, got = run("cached", reinfer=False)
+    jobs_ref, want = run("reinfer", reinfer=True)
+    assert got == want
+    assert want[(10, 1)] == 1 and want[(12, 2)] == 2 and want[(14, 3)] == 13
+    assert jobs[:2] == jobs_ref[:2]
+    assert [r - j for j, r in zip(jobs[2:], jobs_ref[2:])] == [1, 1]
